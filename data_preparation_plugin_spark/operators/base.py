@@ -14,6 +14,11 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 
+def _quote(name: str) -> str:
+    """Backtick-quote each part of a (possibly qualified) table name."""
+    return ".".join(f"`{p}`" for p in name.split("."))
+
+
 class BaseOperator:
     """Config-at-construction, work-in-execute. Subclasses override
     :meth:`execute` and may return a value (e.g. a DataFrame) for chaining.

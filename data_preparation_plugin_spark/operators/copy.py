@@ -12,11 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_preparation_plugin_spark.operators.base import BaseOperator
-
-
-def _quote(name: str) -> str:
-    return ".".join(f"`{p}`" for p in name.split("."))
+from data_preparation_plugin_spark.operators.base import BaseOperator, _quote
 
 
 class CopyTableOperator(BaseOperator):

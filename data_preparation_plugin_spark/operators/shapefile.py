@@ -30,7 +30,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_preparation_plugin_spark.operators.base import BaseOperator
+from data_preparation_plugin_spark.operators.base import BaseOperator, _quote
 
 
 #: Shapefile "no data" threshold: any measure below this is absent (spec).
@@ -372,6 +372,6 @@ class ShapefileLoadOperator(BaseOperator):
 
     def execute(self, spark: SparkSession) -> DataFrame:
         df = read_shapefile(spark, self.shapefile)
-        quoted = ".".join(f"`{p}`" for p in self.table.split("."))
+        quoted = _quote(self.table)
         df.write.mode("overwrite").format("parquet").saveAsTable(quoted)
         return spark.table(quoted)

@@ -21,11 +21,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_preparation_plugin_spark.operators.base import BaseOperator
+from data_preparation_plugin_spark.operators.base import BaseOperator, _quote
 
 
-def _quote(name: str) -> str:
-    return ".".join(f"`{p}`" for p in name.split("."))
+def _to_destination(
+    spark: SparkSession, out: DataFrame, destination: str | None, mode: str
+) -> DataFrame:
+    """``out`` itself, or — with a ``destination`` — ``out`` written there
+    as a parquet table and the table read back."""
+    if not destination:
+        return out
+    out.write.mode(mode).format("parquet").saveAsTable(_quote(destination))
+    return spark.table(_quote(destination))
 
 
 class TransformOperator(BaseOperator):
@@ -50,12 +57,7 @@ class TransformOperator(BaseOperator):
         if self.source is None:
             raise ValueError(f"{self.task_id}: source table required")
         out = self.apply(spark.table(_quote(self.source)))
-        if self.destination:
-            out.write.mode(self.mode).format("parquet").saveAsTable(
-                _quote(self.destination)
-            )
-            return spark.table(_quote(self.destination))
-        return out
+        return _to_destination(spark, out, self.destination, self.mode)
 
 
 class FilterOperator(TransformOperator):
@@ -145,12 +147,7 @@ class JoinOperator(BaseOperator):
             right = F.broadcast(right)
         on = self.on if not isinstance(self.on, str) else F.expr(self.on)
         out = left.join(right, on=on, how=self.how)
-        if self.destination:
-            out.write.mode(self.mode).format("parquet").saveAsTable(
-                _quote(self.destination)
-            )
-            return spark.table(_quote(self.destination))
-        return out
+        return _to_destination(spark, out, self.destination, self.mode)
 
 
 class AggregateOperator(TransformOperator):
@@ -264,12 +261,7 @@ class UnionOperator(BaseOperator):
             out = out.unionByName(df)
         if self.distinct:
             out = out.distinct()
-        if self.destination:
-            out.write.mode(self.mode).format("parquet").saveAsTable(
-                _quote(self.destination)
-            )
-            return spark.table(_quote(self.destination))
-        return out
+        return _to_destination(spark, out, self.destination, self.mode)
 
 
 class SqlOperator(BaseOperator):

@@ -26,7 +26,6 @@ Scale shape at 100 TB:
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 
@@ -39,6 +38,10 @@ from data_preparation_plugin_spark.plans.dedup import (
     _minhash_sql,
     connected_components,
     dedup_minhash_lsh_pairs,
+)
+from data_preparation_plugin_spark.plans.fixture_cache import (
+    build_once,
+    fixture_dir,
 )
 from data_preparation_plugin_spark.plans.registry import load_table, register
 from data_preparation_plugin_spark.plans.text import (
@@ -1165,140 +1168,20 @@ def curation_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ARCHIVE_IDX_ROOT = os.path.join(tempfile.gettempdir(), "dpp-archive-index")
 
-#: How long a concurrent caller waits on another session's index write
-#: before concluding the writer crashed. Module-level so tests can
-#: shrink it; production single-writer discipline means it only fires
-#: on a genuinely dead writer holding a stale lockfile.
-WRITER_LOCK_TIMEOUT_S = 300.0
+#: The three tables of an archive index set; each write drops its own
+#: ``_SUCCESS``, and a set is complete when all three exist.
+_INDEX_PARTS = ("fingerprints", "signatures", "bands")
 
 
-@contextlib.contextmanager
-def single_writer(target_dir: str, done: list, label: str):
-    """O_CREAT|O_EXCL single-writer discipline for a persisted-index dir.
-
-    The one lock protocol every index writer here shares (r15 grew it
-    ad-hoc in ``write_cycle_delta``/``compact_archive_indexes``/
-    ``admit_ivf_batch``; r16 ADVICE asked for the same guarantee on the
-    base builders, so it is now a helper). Yields ``True`` when this
-    caller holds the lock and must write; yields ``False`` when another
-    writer completed every ``done`` marker while we waited — the caller
-    then just reads. A crashed writer leaves a stale lockfile that times
-    out after ``WRITER_LOCK_TIMEOUT_S`` with a remove-hint.
-
-    Half-written reads are excluded by marker discipline, not the lock
-    alone: a lock-holding REBUILD must first REMOVE its ``done`` markers
-    (see the builders) so a waiter can never satisfy the all-markers
-    check between two partial part-table writes.
-    """
-    import time
-
-    os.makedirs(target_dir, exist_ok=True)
-    lock = os.path.join(target_dir, ".writer.lock")
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        deadline = time.monotonic() + WRITER_LOCK_TIMEOUT_S
-        while not all(os.path.exists(p) for p in done):
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"{label} writer lock {lock} held "
-                    f">{WRITER_LOCK_TIMEOUT_S}s with no _SUCCESS markers. "
-                    "A legitimately long write also triggers this — "
-                    "VERIFY the writing session is dead, then remove "
-                    "the lockfile to retry (removing a live writer's "
-                    "lock re-admits the clobber race this lock exists "
-                    "to prevent); otherwise raise WRITER_LOCK_TIMEOUT_S"
-                )
-            time.sleep(0.2)
-        yield False
-        return
-    try:
-        yield True
-    finally:
-        os.close(fd)
-        os.unlink(lock)
-
-
-def cleanup_stale_cache_dirs(root: str, key: str, keep: str) -> None:
-    """Remove superseded cache dirs for the same logical index.
-
-    Cache dirs key on fixture CONTENT fingerprints (size + mtime_ns), so
-    regenerating a fixture abandons the previous ``/tmp`` tree — r16
-    ADVICE flagged the unbounded growth. Every builder records its
-    logical identity (sf_dir, and variant where applicable — NOT the
-    fingerprint) in a ``_KEY`` file; when a new fingerprint builds, any
-    sibling under ``root`` carrying the same ``_KEY`` but a different
-    dir name is a stale epoch of this same index and is removed. Dirs
-    for other fixtures (even with the same basename) have different
-    ``_KEY`` contents and are never touched. Dirs WITHOUT a ``_KEY``
-    are removed only when they match this index's exact legacy naming
-    (``<keep-basename-prefix>-<12-hex-digest>``) — pre-r16 epochs of
-    the same layout, which can never be identified by content and
-    would otherwise leak forever (r16 review).
-    """
-    import re
-    import shutil
-
-    try:
-        siblings = os.listdir(root)
-    except OSError:
-        return
-    keep_name = os.path.basename(os.path.normpath(keep))
-    legacy_pat = re.compile(
-        re.escape(keep_name.rsplit("-", 1)[0]) + r"-[0-9a-f]{12}$"
-    )
-    for name in siblings:
-        d = os.path.join(root, name)
-        if d == keep or not os.path.isdir(d):
-            continue
-        try:
-            with open(os.path.join(d, "_KEY")) as f:
-                if f.read() == key:
-                    shutil.rmtree(d, ignore_errors=True)
-        except OSError:
-            if legacy_pat.match(name):
-                shutil.rmtree(d, ignore_errors=True)
-            continue
-
-
-def write_cache_key(target_dir: str, key: str) -> None:
-    """Record the logical identity of a cache dir (see
-    :func:`cleanup_stale_cache_dirs`)."""
-    with open(os.path.join(target_dir, "_KEY"), "w") as f:
-        f.write(key)
-
-
-def fixture_fingerprint(sf_dir: str, table: str) -> str:
-    """Content fingerprint of one fixture table file (size + mtime_ns).
-
-    Folded into persisted-index cache keys so REGENERATING a fixture at
-    the same path invalidates the cache instead of silently serving a
-    stale index (r15 ADVICE). Size+mtime is the cheap st_* check rsync
-    uses; a byte-level hash of a 100 TB table would defeat the point of
-    caching.
-    """
-    try:
-        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-        return f"{st.st_size}-{st.st_mtime_ns}"
-    except OSError:
-        return "absent"
+def _index_markers(d: str) -> list:
+    return [os.path.join(d, part, "_SUCCESS") for part in _INDEX_PARTS]
 
 
 def archive_index_dir(sf_dir: str) -> str:
-    """Per-fixture directory for the standing archive's persisted indexes.
-
-    Stable across processes (md5 of the path, never Python's salted
-    ``hash()``) and collision-safe across sf dirs — the same discipline
-    as ``plans/events._stage_events``. The documents table's content
-    fingerprint is part of the key: new fixture bytes at the same path
-    mean a new cache directory, never a stale index.
+    """Per-fixture directory for the standing archive's persisted indexes,
+    keyed on the documents table's content (``fixture_cache.fixture_dir``).
     """
-    import hashlib
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'documents')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    return os.path.join(_ARCHIVE_IDX_ROOT, f"{base}-{digest}")
+    return fixture_dir(_ARCHIVE_IDX_ROOT, sf_dir, "documents")[0]
 
 
 def build_archive_indexes(
@@ -1336,42 +1219,31 @@ def build_archive_indexes(
         minhash_band_rows,
     )
 
-    base = archive_index_dir(sf_dir)
-    done = [
-        os.path.join(base, part, "_SUCCESS")
-        for part in ("fingerprints", "signatures", "bands")
-    ]
-    if not force and all(os.path.exists(p) for p in done):
-        return base
-    # Single-writer like every index writer here (r16 ADVICE: the entry-
-    # point builders raced too, not just the appends): one session
-    # builds, concurrent callers wait on the markers.
-    with single_writer(base, done, "archive index") as acquired:
-        if acquired and (force or not all(os.path.exists(p) for p in done)):
-            # Remove markers FIRST so no waiter passes the all-markers
-            # check between two partial part-table rewrites.
-            for p in done:
-                with contextlib.suppress(OSError):
-                    os.unlink(p)
-            cleanup_stale_cache_dirs(_ARCHIVE_IDX_ROOT, sf_dir, keep=base)
-            # _KEY FIRST: a build that dies mid-write must still leave
-            # an identifiable (hence cleanable) epoch (r16 review).
-            write_cache_key(base, sf_dir)
-            docs = load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % INCR_MINHASH_MOD != 0
-            )
-            docs.select(F.md5("text").alias("fp")).distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(base, "fingerprints"))
-            _minhash_signatures(docs).write.mode("overwrite").parquet(
-                os.path.join(base, "signatures")
-            )
-            sigs = spark.read.parquet(os.path.join(base, "signatures"))
-            write_partitioned(
-                minhash_band_rows(sigs),
-                os.path.join(base, "bands"),
-                ["band_idx"],
-            )
+    base, key = fixture_dir(_ARCHIVE_IDX_ROOT, sf_dir, "documents")
+
+    def write() -> None:
+        docs = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % INCR_MINHASH_MOD != 0
+        )
+        docs.select(F.md5("text").alias("fp")).distinct().write.mode(
+            "overwrite"
+        ).parquet(os.path.join(base, "fingerprints"))
+        _minhash_signatures(docs).write.mode("overwrite").parquet(
+            os.path.join(base, "signatures")
+        )
+        sigs = spark.read.parquet(os.path.join(base, "signatures"))
+        write_partitioned(
+            minhash_band_rows(sigs), os.path.join(base, "bands"), ["band_idx"]
+        )
+
+    build_once(
+        base,
+        _index_markers(base),
+        write,
+        label="archive index",
+        force=force,
+        epoch_key=key,
+    )
     return base
 
 
@@ -1587,33 +1459,27 @@ def write_cycle_delta(
     )
 
     cdir = os.path.join(base, "cycles", cycle)
-    done = [
-        os.path.join(cdir, part, "_SUCCESS")
-        for part in ("fingerprints", "signatures", "bands")
-    ]
-    if all(os.path.exists(p) for p in done):
-        return cdir
-    with single_writer(cdir, done, "cycle delta") as acquired:
-        if acquired and not all(os.path.exists(p) for p in done):
-            adm_docs.select(F.md5("text").alias("fp")).distinct().join(
-                fp_idx, "fp", "left_anti"
-            ).write.mode("overwrite").parquet(
-                os.path.join(cdir, "fingerprints")
-            )
-            _minhash_signatures(adm_docs).write.mode("overwrite").parquet(
-                os.path.join(cdir, "signatures")
-            )
-            sig_schema = "doc_id BIGINT, " + ", ".join(
-                f"h{s} STRING" for s in range(MINHASH_SEEDS)
-            )
-            sig_delta = spark.read.schema(sig_schema).parquet(
-                os.path.join(cdir, "signatures")
-            )
-            write_partitioned(
-                minhash_band_rows(sig_delta),
-                os.path.join(cdir, "bands"),
-                ["band_idx"],
-            )
+
+    def write() -> None:
+        adm_docs.select(F.md5("text").alias("fp")).distinct().join(
+            fp_idx, "fp", "left_anti"
+        ).write.mode("overwrite").parquet(os.path.join(cdir, "fingerprints"))
+        _minhash_signatures(adm_docs).write.mode("overwrite").parquet(
+            os.path.join(cdir, "signatures")
+        )
+        sig_schema = "doc_id BIGINT, " + ", ".join(
+            f"h{s} STRING" for s in range(MINHASH_SEEDS)
+        )
+        sig_delta = spark.read.schema(sig_schema).parquet(
+            os.path.join(cdir, "signatures")
+        )
+        write_partitioned(
+            minhash_band_rows(sig_delta),
+            os.path.join(cdir, "bands"),
+            ["band_idx"],
+        )
+
+    build_once(cdir, _index_markers(cdir), write, label="cycle delta")
     return cdir
 
 
@@ -1891,26 +1757,14 @@ def compact_archive_indexes(
     from data_preparation_plugin_spark.layout import write_partitioned
 
     odir = os.path.join(base, out_name)
-    done = [
-        os.path.join(odir, part, "_SUCCESS")
-        for part in ("fingerprints", "signatures", "bands")
-    ]
-    if all(os.path.exists(p) for p in done):
-        return odir
-    with single_writer(odir, done, "compaction") as acquired:
-        if acquired and not all(os.path.exists(p) for p in done):
-            fps, sigs, bands = read_archive_indexes(
-                spark, base, cycles=cycle_dirs
-            )
-            fps.write.mode("overwrite").parquet(
-                os.path.join(odir, "fingerprints")
-            )
-            sigs.write.mode("overwrite").parquet(
-                os.path.join(odir, "signatures")
-            )
-            write_partitioned(
-                bands, os.path.join(odir, "bands"), ["band_idx"]
-            )
+
+    def write() -> None:
+        fps, sigs, bands = read_archive_indexes(spark, base, cycles=cycle_dirs)
+        fps.write.mode("overwrite").parquet(os.path.join(odir, "fingerprints"))
+        sigs.write.mode("overwrite").parquet(os.path.join(odir, "signatures"))
+        write_partitioned(bands, os.path.join(odir, "bands"), ["band_idx"])
+
+    build_once(odir, _index_markers(odir), write, label="compaction")
     return odir
 
 
@@ -2083,11 +1937,7 @@ def retire_cycle_dirs(compacted: str, cycle_dirs: list) -> None:
     """
     import shutil
 
-    done = [
-        os.path.join(compacted, part, "_SUCCESS")
-        for part in ("fingerprints", "signatures", "bands")
-    ]
-    missing = [p for p in done if not os.path.exists(p)]
+    missing = [p for p in _index_markers(compacted) if not os.path.exists(p)]
     if missing:
         raise ValueError(
             f"refusing to retire cycle dirs: compaction at {compacted} "

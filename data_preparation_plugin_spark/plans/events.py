@@ -10,10 +10,17 @@ batch/stream equivalence.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from data_preparation_plugin_spark.plans.fixture_cache import (
+    build_once,
+    fixture_digest,
+    fixture_dir,
+)
 from data_preparation_plugin_spark.plans.registry import (
     int_ratio_round_sql,
     load_table,
@@ -152,69 +159,56 @@ _STREAM_RUN_COUNTER = 0
 REPLAY_STATE_PARTITIONS = 4
 
 
-def _retire_legacy_flat_stages(prefix: str) -> None:
-    """Remove pre-r16 FLAT staging dirs (``/tmp/<prefix>-<base>-<digest>``).
+def _stage(
+    sf_dir: str,
+    root: str,
+    label: str,
+    write: Callable[[str], None],
+    root_marker: bool = False,
+) -> str:
+    """Stage a copy of the events fixture for file-source replay, once.
 
-    r16 moved the staging caches under ``/tmp/<prefix>/``; nothing can
-    read the old flat layout anymore, so any directory still matching it
-    is a dead epoch the new root's cleanup can never see (r16 review).
+    The copy is a parquet table in ``<cache>/events``: a
+    ``mode("overwrite")`` write to the locked cache dir itself would
+    delete the lockfile mid-hold. The cache dir keys on the events
+    table's content (``fixture_cache.build_once``), so a regenerated
+    fixture stages fresh and its stale epoch is retired.
+    ``write(staged)`` writes the table; with ``root_marker`` the stage
+    is complete only at a ``<cache>/_STAGED_OK`` touched after it,
+    because a multi-write stage leaves a ``_SUCCESS`` after every write.
     """
-    import glob
     import os
     import shutil
-    import tempfile
 
-    for d in glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}-*")):
-        if os.path.isdir(d):
-            shutil.rmtree(d, ignore_errors=True)
+    cache, key = fixture_dir(root, sf_dir, "events")
+    staged = os.path.join(cache, "events")
+    if root_marker:
+        done = os.path.join(cache, "_STAGED_OK")
+    else:
+        done = os.path.join(staged, "_SUCCESS")
+
+    def body() -> None:
+        shutil.rmtree(staged, ignore_errors=True)
+        write(staged)
+        if root_marker:
+            with open(done, "w"):
+                pass
+
+    build_once(cache, [done], body, label=label, epoch_key=key)
+    return staged
 
 
 def _stage_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the events fixture as a multi-file dir for file-source replay.
-
-    The staging dir name must be stable across processes: Python's
-    ``hash()`` of a string is salted per process (PYTHONHASHSEED), which
-    both defeated the ``_SUCCESS`` cache across runs and risked two sf
-    dirs colliding onto one staged dir that would then be silently
-    replayed as the wrong fixture. md5 of the path plus the basename is
-    deterministic and collision-safe. r16 sweep of the index-writer
-    ADVICE classes: the key now folds in the events table's CONTENT
-    fingerprint (a regenerated fixture stages fresh, stale epochs are
-    removed via the ``_KEY`` protocol) and the write runs under
-    ``curation.single_writer`` (two sessions racing the overwrite could
-    hand one of them a half-written replay source).
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        fixture_fingerprint,
-        single_writer,
-        write_cache_key,
+    """Stage the events fixture as a multi-file dir for file-source replay."""
+    return _stage(
+        sf_dir,
+        "dpp-events-replay",
+        "events replay stage",
+        lambda staged: load_table(spark, sf_dir, "events")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(staged),
     )
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(tempfile.gettempdir(), "dpp-events-replay")
-    cache = os.path.join(root, f"{base}-{digest}")
-    # The parquet table lives in a SUBdir: a mode("overwrite") write to
-    # the locked dir itself would delete the lockfile mid-hold.
-    staged = os.path.join(cache, "events")
-    done = [os.path.join(staged, "_SUCCESS")]
-    if all(os.path.exists(p) for p in done):
-        return staged
-    with single_writer(cache, done, "events replay stage") as acquired:
-        if acquired and not all(os.path.exists(p) for p in done):
-            cleanup_stale_cache_dirs(root, sf_dir, keep=cache)
-            _retire_legacy_flat_stages("dpp-events-replay")
-            write_cache_key(cache, sf_dir)  # pre-write: r16 review
-            load_table(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(staged)
-    return staged
 
 
 def _replay(
@@ -639,48 +633,24 @@ def _stage_events_duplicated(spark: SparkSession, sf_dir: str) -> str:
     file stream source orders micro-batches by mod time — so the replay
     sees every event once in an early batch and again in a later one,
     which is exactly the cross-batch duplicate stream
-    ``dropDuplicatesWithinWatermark`` exists to clean. A dedicated
-    ``_STAGED_OK`` marker (written only after BOTH writes land) gates the
-    cache, because each append also drops its own ``_SUCCESS``. Locked
-    and content-keyed like ``_stage_events`` (r16 sweep): the two-write
-    staging is exactly the shape where an unlocked concurrent reader
-    sees the single-copy intermediate state and its dedup replay
-    silently degenerates.
+    ``dropDuplicatesWithinWatermark`` exists to clean. The root
+    ``_STAGED_OK`` marker gates the cache: without it a concurrent
+    reader could see the single-copy intermediate state and its dedup
+    replay would silently degenerate.
     """
-    import hashlib
-    import os
-    import tempfile
-    from pathlib import Path
 
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        fixture_fingerprint,
-        single_writer,
-        write_cache_key,
+    def write(staged: str) -> None:
+        events = load_table(spark, sf_dir, "events")
+        events.repartition(4).write.mode("overwrite").parquet(staged)
+        events.repartition(2).write.mode("append").parquet(staged)
+
+    return _stage(
+        sf_dir,
+        "dpp-events-dupreplay",
+        "dup-replay stage",
+        write,
+        root_marker=True,
     )
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(tempfile.gettempdir(), "dpp-events-dupreplay")
-    cache = os.path.join(root, f"{base}-{digest}")
-    staged = os.path.join(cache, "events")
-    marker = Path(cache) / "_STAGED_OK"
-    if marker.exists():
-        return staged
-    with single_writer(cache, [str(marker)], "dup-replay stage") as acquired:
-        if acquired and not marker.exists():
-            import shutil
-
-            cleanup_stale_cache_dirs(root, sf_dir, keep=cache)
-            _retire_legacy_flat_stages("dpp-events-dupreplay")
-            write_cache_key(cache, sf_dir)  # pre-write: r16 review
-            shutil.rmtree(staged, ignore_errors=True)
-            events = load_table(spark, sf_dir, "events")
-            events.repartition(4).write.mode("overwrite").parquet(staged)
-            events.repartition(2).write.mode("append").parquet(staged)
-            marker.touch()
-    return staged
 
 
 @register(
@@ -907,6 +877,7 @@ def events_stream_merge_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the table streams map-side; the checkpointed rewrite is the
     same compact-on-write discipline as ``sink_merge_upsert``.
     """
+    import shutil
     import tempfile
 
     from data_preparation_plugin_spark.layout import merge_upsert
@@ -953,6 +924,9 @@ def events_stream_merge_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.awaitTermination()
     finally:
+        # The finished availableNow query never reads its checkpoint
+        # again; the table dir stays, the returned frame reads it lazily.
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     return spark.read.parquet(target_dir).select(
         "user_id",
@@ -1253,57 +1227,32 @@ def _stage_events_sorted(spark: SparkSession, sf_dir: str) -> str:
     in event-time order. With an ordered replay a small watermark
     advances monotonically and never declares a legitimate match late —
     the property the left-outer interval join's determinism rests on.
-
-    Locked and content-keyed like the other two stages — this was the
-    THIRD staging helper, missed by the r16 sweep until the adversarial
-    edge drive served a stale epoch (Spark emitted purchases that no
-    longer existed in the regenerated fixture) and exposed it.
     """
-    import hashlib
+    import glob
     import os
-    import tempfile
 
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        fixture_fingerprint,
-        single_writer,
-        write_cache_key,
+    def write(staged: str) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .repartitionByRange(4, "ts")
+            .sortWithinPartitions("ts")
+            .write.mode("overwrite")
+            .parquet(staged)
+        )
+        # part-0000i holds the i-th ts range; stamp mtimes in order.
+        base_t = 1_600_000_000
+        for i, path in enumerate(
+            sorted(glob.glob(os.path.join(staged, "part-*")))
+        ):
+            os.utime(path, (base_t + i, base_t + i))
+
+    return _stage(
+        sf_dir,
+        "dpp-events-sortedreplay",
+        "sorted-replay stage",
+        write,
+        root_marker=True,
     )
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(tempfile.gettempdir(), "dpp-events-sortedreplay")
-    cache = os.path.join(root, f"{base}-{digest}")
-    staged = os.path.join(cache, "events")
-    marker = os.path.join(cache, "_STAGED_OK")
-    if os.path.exists(marker):
-        return staged
-    with single_writer(cache, [marker], "sorted-replay stage") as acquired:
-        if acquired and not os.path.exists(marker):
-            import glob
-            import shutil
-
-            cleanup_stale_cache_dirs(root, sf_dir, keep=cache)
-            _retire_legacy_flat_stages("dpp-events-sortedreplay")
-            write_cache_key(cache, sf_dir)
-            shutil.rmtree(staged, ignore_errors=True)
-            events = load_table(spark, sf_dir, "events")
-            (
-                events.repartitionByRange(4, "ts")
-                .sortWithinPartitions("ts")
-                .write.mode("overwrite")
-                .parquet(staged)
-            )
-            # part-0000i holds the i-th ts range; stamp mtimes in order.
-            base_t = 1_600_000_000
-            for i, path in enumerate(
-                sorted(glob.glob(os.path.join(staged, "part-*")))
-            ):
-                os.utime(path, (base_t + i, base_t + i))
-            with open(marker, "w"):
-                pass
-    return staged
 
 
 #: Left-outer interval join knobs: attribution window and watermark delay.
@@ -5111,15 +5060,7 @@ def quantile_sink_table(sf_dir: str) -> str:
     other's DROP/recreate; a single fixture's runs remain single-writer,
     the same contract as ``curation.write_cycle_delta`` (r15 ADVICE).
     """
-    import hashlib
-
-    from data_preparation_plugin_spark.plans.curation import (
-        fixture_fingerprint,
-    )
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    return f"dpp_stream_quantile_cells_{digest}"
+    return f"dpp_stream_quantile_cells_{fixture_digest(sf_dir, 'events')}"
 
 
 #: Watermark delay for the PG-sinked daily quantile dashboard; only

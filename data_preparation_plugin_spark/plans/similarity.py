@@ -26,6 +26,11 @@ from data_preparation_plugin_spark.functions.vector import (
     l2_norm,
     lit_vector,
 )
+from data_preparation_plugin_spark.plans.fixture_cache import (
+    build_once,
+    fixture_dir,
+    single_writer,
+)
 from data_preparation_plugin_spark.plans.registry import (
     NONZERO_VEC_SQL,
     load_table,
@@ -3190,6 +3195,10 @@ def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Cache family dir of the persisted IVF indexes, under the temp dir.
+_IVF_ROOT = "dpp-ivf-index"
+
+
 def ivf_index_dir(sf_dir: str, variant: str = "full") -> str:
     """Per-fixture directory for the persisted IVF index (md5-stable).
 
@@ -3199,19 +3208,33 @@ def ivf_index_dir(sf_dir: str, variant: str = "full") -> str:
     (r15 ADVICE). ``variant`` separates the full-corpus index from the
     admission-test base index (built minus the held-out batch).
     """
-    import hashlib
+    return fixture_dir(_IVF_ROOT, sf_dir, "embeddings", variant=variant)[0]
+
+
+def _ivf_markers(base: str) -> list:
     import os
-    import tempfile
 
-    from data_preparation_plugin_spark.plans.curation import (
-        fixture_fingerprint,
+    return [
+        os.path.join(base, part, "_SUCCESS")
+        for part in ("centroids", "assignments")
+    ]
+
+
+def _write_ivf_tables(base: str, emb: DataFrame) -> None:
+    """Write the codebook (the first ``IVF_N_CELLS`` vectors) and the
+    cell-partitioned assignments of ``emb`` (vec_id, v) under ``base``."""
+    import os
+
+    from data_preparation_plugin_spark.layout import write_partitioned
+
+    cents = emb.filter(F.col("vec_id") < IVF_N_CELLS).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'embeddings')}|{variant}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    return os.path.join(
-        tempfile.gettempdir(), "dpp-ivf-index", f"{base}-{digest}"
+    cents.write.mode("overwrite").parquet(os.path.join(base, "centroids"))
+    write_partitioned(
+        _assign_to_codebook(emb, cents),
+        os.path.join(base, "assignments"),
+        ["cell"],
     )
 
 
@@ -3229,56 +3252,28 @@ def build_ivf_index(
     the inverted-list property made physical). Cached per fixture behind
     ``_SUCCESS``; production refreshes by re-assigning only new vectors.
     """
-    import contextlib
-    import os
-
-    from data_preparation_plugin_spark.layout import write_partitioned
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        single_writer,
-        write_cache_key,
-    )
-
-    base = ivf_index_dir(sf_dir)
-    done = [
-        os.path.join(base, part, "_SUCCESS")
-        for part in ("centroids", "assignments")
-    ]
-    if not force and all(os.path.exists(p) for p in done):
-        return base
-    # Single-writer (r16 ADVICE): without the lock, two sessions that
-    # both see missing markers race overwrite-writes into the same dir,
-    # and a waiter could read centroids whose assignments are still
-    # being written. Markers are removed before a rebuild so waiters
-    # ENTERING here can never satisfy the all-markers check mid-write.
-    # Scope: the guarantee covers build-time waiters, not a reader
+    base, key = fixture_dir(_IVF_ROOT, sf_dir, "embeddings", variant="full")
+    # Scope: the lock guarantees build-time waiters never read centroids
+    # paired with half-written assignments; it does not cover a reader
     # whose lazy plan is mid-scan when another session force-rebuilds
     # the same dir in place — same-fixture force rebuilds are a
     # single-operator action (fixture REGENERATION gets a fresh epoch
     # dir via the content-fingerprint key and never collides).
-    with single_writer(base, done, "IVF index") as acquired:
-        if acquired and (force or not all(os.path.exists(p) for p in done)):
-            for p in done:
-                with contextlib.suppress(OSError):
-                    os.unlink(p)
-            cleanup_stale_cache_dirs(
-                os.path.dirname(base), f"{sf_dir}|full", keep=base
-            )
-            write_cache_key(base, f"{sf_dir}|full")  # pre-write: r16 review
-            emb = load_table(spark, sf_dir, "embeddings").select(
+    build_once(
+        base,
+        _ivf_markers(base),
+        lambda: _write_ivf_tables(
+            base,
+            load_table(spark, sf_dir, "embeddings")
+            .select(
                 "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ).filter(nonzero_vec("v"))
-            cents = emb.filter(F.col("vec_id") < IVF_N_CELLS).select(
-                F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
             )
-            cents.write.mode("overwrite").parquet(
-                os.path.join(base, "centroids")
-            )
-            write_partitioned(
-                _assign_to_codebook(emb, cents),
-                os.path.join(base, "assignments"),
-                ["cell"],
-            )
+            .filter(nonzero_vec("v")),
+        ),
+        label="IVF index",
+        force=force,
+        epoch_key=key,
+    )
     return base
 
 
@@ -3435,69 +3430,40 @@ def build_ivf_base_index(
     import contextlib
     import os
 
-    from data_preparation_plugin_spark.layout import write_partitioned
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        single_writer,
-        write_cache_key,
-    )
-
     if variant is None:
         variant = "base-" + "-".join(map(str, IVF_ADMIT_RESIDUES))
-    base = ivf_index_dir(sf_dir, variant=variant)
-    done = [
-        os.path.join(base, part, "_SUCCESS")
-        for part in ("centroids", "assignments")
-    ]
-    if not force and all(os.path.exists(p) for p in done):
-        return base
-    # Single-writer (r16 ADVICE — the entry-point builder raced like the
-    # appends did pre-r15): rebuilds clear the part markers first so a
-    # waiter entering the lock path can never read centroids paired
-    # with half-written assignments, then retire every admission
-    # artifact (markers AND crash-recovery manifests) so the rebuilt
-    # index starts un-admitted. Same scope note as build_ivf_index:
-    # in-place force rebuilds assume no concurrent reader of the SAME
-    # dir (the drill's dedicated `variant` isolates it from the
-    # steady-state queries; concurrent bench/probe processes are a
-    # measurement-hygiene violation regardless).
-    with single_writer(base, done, "IVF base index") as acquired:
-        if acquired and (force or not all(os.path.exists(p) for p in done)):
-            for p in done:
+    base, key = fixture_dir(_IVF_ROOT, sf_dir, "embeddings", variant=variant)
+
+    def write() -> None:
+        # A rebuilt index starts un-admitted: retire every admission
+        # artifact (markers AND crash-recovery manifests) first.
+        for r in IVF_ADMIT_RESIDUES:
+            for stale in (f"_ADMITTED_r{r}", f"_PRE_ADMIT_r{r}.json"):
                 with contextlib.suppress(OSError):
-                    os.unlink(p)
-            for r in IVF_ADMIT_RESIDUES:
-                for stale in (f"_ADMITTED_r{r}", f"_PRE_ADMIT_r{r}.json"):
-                    with contextlib.suppress(OSError):
-                        os.unlink(os.path.join(base, stale))
-            cleanup_stale_cache_dirs(
-                os.path.dirname(base), f"{sf_dir}|{variant}", keep=base
+                    os.unlink(os.path.join(base, stale))
+        _write_ivf_tables(
+            base,
+            load_table(spark, sf_dir, "embeddings")
+            .filter(
+                ~(F.col("vec_id") % IVF_ADMIT_MOD).isin(*IVF_ADMIT_RESIDUES)
             )
-            write_cache_key(base, f"{sf_dir}|{variant}")  # pre-write
-            emb = (
-                load_table(spark, sf_dir, "embeddings")
-                .filter(
-                    ~(F.col("vec_id") % IVF_ADMIT_MOD).isin(
-                        *IVF_ADMIT_RESIDUES
-                    )
-                )
-                .select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("v"),
-                )
-                .filter(nonzero_vec("v"))
+            .select(
+                "vec_id", F.col("embedding").cast("array<double>").alias("v")
             )
-            cents = emb.filter(F.col("vec_id") < IVF_N_CELLS).select(
-                F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-            )
-            cents.write.mode("overwrite").parquet(
-                os.path.join(base, "centroids")
-            )
-            write_partitioned(
-                _assign_to_codebook(emb, cents),
-                os.path.join(base, "assignments"),
-                ["cell"],
-            )
+            .filter(nonzero_vec("v")),
+        )
+
+    # Same scope note as build_ivf_index: in-place force rebuilds assume
+    # no concurrent reader of the SAME dir (the drill's dedicated
+    # `variant` isolates it from the steady-state queries).
+    build_once(
+        base,
+        _ivf_markers(base),
+        write,
+        label="IVF base index",
+        force=force,
+        epoch_key=key,
+    )
     return base
 
 
@@ -3536,10 +3502,8 @@ def admit_ivf_batch(
     """
     import json
     import os
-    import time
 
     from data_preparation_plugin_spark.layout import write_partitioned
-    from data_preparation_plugin_spark.plans import curation
 
     marker = os.path.join(base, f"_ADMITTED_r{residue}")
     if os.path.exists(marker):
@@ -3555,29 +3519,10 @@ def admit_ivf_batch(
                 )
         return sorted(out)
 
-    lock = os.path.join(base, ".admit.lock")
-    deadline = time.monotonic() + curation.WRITER_LOCK_TIMEOUT_S
-    while True:
-        if os.path.exists(marker):
-            return
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"IVF admit lock {lock} held "
-                    f">{curation.WRITER_LOCK_TIMEOUT_S}s with no "
-                    f"_ADMITTED_r{residue} marker. A legitimately slow "
-                    "admission of ANOTHER residue also holds this "
-                    "index-global lock — VERIFY the writing session is "
-                    "dead, then remove the lockfile to retry "
-                    "(removing a live writer's lock interleaves "
-                    "appends); otherwise raise WRITER_LOCK_TIMEOUT_S"
-                )
-            time.sleep(0.2)
-    try:
-        if os.path.exists(marker):  # re-check under the lock
+    with single_writer(
+        base, [marker], f"IVF admit r{residue}", lock_name=".admit.lock"
+    ) as acquired:
+        if not acquired or os.path.exists(marker):  # re-check under lock
             return
         pre = os.path.join(base, f"_PRE_ADMIT_r{residue}.json")
         if os.path.exists(pre):
@@ -3611,9 +3556,6 @@ def admit_ivf_batch(
         with open(marker, "w"):
             pass
         os.unlink(pre)
-    finally:
-        os.close(fd)
-        os.unlink(lock)
 
 
 def ivf_cell_skew(spark: SparkSession, base: str) -> dict:

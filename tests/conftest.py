@@ -11,8 +11,6 @@ import math
 import os
 from datetime import datetime
 
-import tempfile
-
 import duckdb
 import pytest
 
@@ -23,12 +21,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     session = get_spark(
         app_name="dpp-spark-tests",
         master="local[4]",
         shuffle_partitions=4,
-        warehouse_dir=tempfile.mkdtemp(prefix="dpp-spark-warehouse-"),
+        warehouse_dir=str(tmp_path_factory.mktemp("dpp-spark-warehouse")),
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
     )
     yield session

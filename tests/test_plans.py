@@ -2147,7 +2147,7 @@ def test_cycle_delta_waiter_and_stale_lock(spark, tmp_path, monkeypatch):
 
     import pytest as _pytest
 
-    from data_preparation_plugin_spark.plans import curation
+    from data_preparation_plugin_spark.plans import curation, fixture_cache
 
     cdir = tmp_path / "cycles" / "c1"
     cdir.mkdir(parents=True)
@@ -2170,12 +2170,59 @@ def test_cycle_delta_waiter_and_stale_lock(spark, tmp_path, monkeypatch):
     assert got == str(cdir)
 
     # Stale lock, writer dead, markers never appear -> bounded TimeoutError.
-    monkeypatch.setattr(curation, "WRITER_LOCK_TIMEOUT_S", 0.6)
+    monkeypatch.setattr(fixture_cache, "WRITER_LOCK_TIMEOUT_S", 0.6)
     stale = tmp_path / "cycles" / "c2"
     stale.mkdir(parents=True)
     (stale / ".writer.lock").touch()
     with _pytest.raises(TimeoutError, match="remove the lockfile"):
         curation.write_cycle_delta(spark, str(tmp_path), None, "c2", None)
+
+
+def test_build_once_single_writer_under_contention(tmp_path):
+    """Eight threads race one build: a writer that fails releases the
+    lock to a waiter instead of stranding it, exactly one more write
+    runs, and every other caller returns only once the marker exists."""
+    import os
+    import sys
+    import threading
+    import time as _time
+
+    from data_preparation_plugin_spark.plans.fixture_cache import build_once
+
+    target = str(tmp_path / "cache")
+    marker = os.path.join(target, "_SUCCESS")
+    writes, returned = [], []
+
+    def write():
+        writes.append(1)
+        _time.sleep(0.05)
+        if len(writes) == 1:
+            raise RuntimeError("first writer dies")
+        with open(marker, "w"):
+            pass
+
+    def caller():
+        try:
+            build_once(target, [marker], write, label="contention")
+        except RuntimeError:
+            return
+        returned.append(os.path.exists(marker))
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=caller, daemon=True) for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert len(writes) == 2
+    assert returned == [True] * 7
 
 
 def test_ivf_drift_guard_retrain_end_to_end(spark, tmp_path):
@@ -2325,8 +2372,9 @@ def test_post_compaction_probe_all_broadcast(spark):
 def test_stale_cache_epochs_are_removed(spark, tmp_path):
     """cleanup_stale_cache_dirs: regenerating a fixture must not leak the
     previous fingerprint epoch's /tmp tree (r16 ADVICE) — the next build
-    removes superseded dirs carrying the same _KEY identity, and never
-    touches other fixtures' dirs."""
+    removes superseded dirs carrying the same _KEY identity, and orphans
+    whose fixture dir no longer exists, and never touches other live
+    fixtures' dirs."""
     import os
     import shutil
     import time
@@ -2344,11 +2392,23 @@ def test_stale_cache_epochs_are_removed(spark, tmp_path):
     d0 = build_archive_indexes(spark, sf)
     assert os.path.exists(os.path.join(d0, "_KEY"))
 
+    def cache_dir(name: str, key: str) -> str:
+        d = os.path.join(_ARCHIVE_IDX_ROOT, name)
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "_KEY"), "w") as f:
+            f.write(key)
+        return d
+
     # Unrelated dir with a DIFFERENT _KEY must survive the cleanup.
-    other = os.path.join(_ARCHIVE_IDX_ROOT, "other-fixture-dir")
-    os.makedirs(other, exist_ok=True)
-    with open(os.path.join(other, "_KEY"), "w") as f:
-        f.write("/some/other/sf_dir")
+    live_sf = tmp_path / "other-sf"
+    live_sf.mkdir()
+    other = cache_dir("other-fixture-dir", str(live_sf))
+    # Dirs keyed to a deleted fixture dir are orphans, variant or not.
+    gone_sf = str(tmp_path / "deleted-sf")
+    orphans = [
+        cache_dir("orphan-fixture-dir", gone_sf),
+        cache_dir("orphan-variant-dir", f"{gone_sf}|full"),
+    ]
 
     time.sleep(0.05)
     os.utime(f"{sf}/documents.parquet")  # "regenerated" fixture
@@ -2357,30 +2417,51 @@ def test_stale_cache_epochs_are_removed(spark, tmp_path):
     build_archive_indexes(spark, sf)
     assert not os.path.exists(d0), "stale epoch should be removed"
     assert os.path.exists(other), "foreign cache dirs must be untouched"
+    for d in orphans:
+        assert not os.path.exists(d), "orphaned epoch should be removed"
     shutil.rmtree(other, ignore_errors=True)
     shutil.rmtree(d1, ignore_errors=True)
 
 
-def test_events_stage_keys_on_fixture_content(spark, tmp_path):
-    """The streaming replay stage must invalidate when the events fixture
-    is regenerated at the same path (same class as the r15 index-cache
-    ADVICE), and retire the stale epoch."""
+@pytest.mark.parametrize(
+    "stage",
+    ["_stage_events", "_stage_events_duplicated", "_stage_events_sorted"],
+)
+def test_events_stage_keys_on_fixture_content(spark, tmp_path, stage):
+    """Each streaming replay stage must invalidate when the events
+    fixture is regenerated at the same path (same class as the r15
+    index-cache ADVICE), and retire the stale epoch."""
     import os
     import shutil
     import time
 
-    from data_preparation_plugin_spark.plans.events import _stage_events
+    from data_preparation_plugin_spark.plans import events
 
+    stage_events = getattr(events, stage)
     sf = str(tmp_path)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{sf}/events.parquet")
-    s0 = _stage_events(spark, sf)
+    s0 = stage_events(spark, sf)
     assert os.path.exists(os.path.join(s0, "_SUCCESS"))
     time.sleep(0.05)
     os.utime(f"{sf}/events.parquet")
-    s1 = _stage_events(spark, sf)
+    s1 = stage_events(spark, sf)
     assert s1 != s0
     assert not os.path.exists(os.path.dirname(s0)), "stale stage retired"
     shutil.rmtree(os.path.dirname(s1), ignore_errors=True)
+
+
+def test_merge_totals_removes_its_checkpoint(spark):
+    """The availableNow MERGE replay deletes its streaming checkpoint dir
+    once the query terminates; only the table dir the returned frame
+    reads stays."""
+    import glob
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "dpp-stream-merge-ckpt-*")
+    before = set(glob.glob(pattern))
+    QUERIES["events_stream_merge_totals"].builder(spark, SF_DIR)
+    assert set(glob.glob(pattern)) <= before
 
 
 def test_gear_vec_edge_cases_match_python_reference(spark, tmp_path):

@@ -223,19 +223,21 @@ def main() -> None:
     # HOST, not session warmth (VERDICT r16 #2).
     calib_end_warm = None if skip_calib else calibrate(spark, run)
     calib_end = None if skip_calib else calibrate_cold()
-    if calib_end is None:
-        calib_end = calib_end_warm  # subprocess failed: legacy fallback
     total = round(sum(timings.values()), 3)
     total_single = round(sum(singles.values()), 3)
     dt = total1 - total0
     steal_pct = round(100.0 * (steal1 - steal0) / dt, 2) if dt > 0 else None
     calibration = None
     host_factor = None
-    if calib_start is not None and calib_end is not None:
-        host_factor = round(
-            (calib_start["host_factor"] * calib_end["host_factor"]) ** 0.5,
-            3,
-        )
+    if calib_start is not None:
+        # A failed cold end probe leaves ``end`` and ``host_factor`` null:
+        # the warm probe measures session warmth, not the host.
+        if calib_end is not None:
+            host_factor = round(
+                (calib_start["host_factor"] * calib_end["host_factor"])
+                ** 0.5,
+                3,
+            )
         calibration = {
             "reference_sec": CALIBRATION_REFERENCE,
             "reference_window": "r15 2026-08-16 best-of-5 at 0.04% steal",
@@ -293,6 +295,7 @@ def main() -> None:
         "value_single": total_single,
         "steal_pct": steal_pct,
         "host_factor": host_factor,
+        "cpus": spark.sparkContext.defaultParallelism,
         "n_queries": len(timings),
         "detail": detail_path,
     }

@@ -1980,7 +1980,7 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles and corrupt intersection counts, so fail loudly — at
     # that point the fix is widening the surrogate (e.g. pairing
     # xxhash64 with a second seed), not silent output.
-    n_docs, n_rows, n_sids = (
+    _, n_rows, n_sids = (
         doc_sets.agg(F.count(F.lit(1)).alias("nd"))
         .crossJoin(
             vocab.agg(

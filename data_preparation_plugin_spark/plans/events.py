@@ -923,17 +923,24 @@ def events_stream_merge_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
+        return (
+            spark.read.parquet(target_dir)
+            .select(
+                "user_id",
+                "event_type",
+                "n_events",
+                F.round("total_value", 2).alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
+        )
     finally:
-        # The finished availableNow query never reads its checkpoint
-        # again; the table dir stays, the returned frame reads it lazily.
+        # The returned frame is eagerly checkpointed from the table, so
+        # neither the finished stream's checkpoint nor the table dir is
+        # read again; removing both keeps repeated runs from
+        # accumulating /tmp state.
         shutil.rmtree(ckpt_dir, ignore_errors=True)
+        shutil.rmtree(target_dir, ignore_errors=True)
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    return spark.read.parquet(target_dir).select(
-        "user_id",
-        "event_type",
-        "n_events",
-        F.round("total_value", 2).alias("total_value"),
-    )
 
 
 #: Watermark delay modeled by `events_watermark_audit`, in minutes.

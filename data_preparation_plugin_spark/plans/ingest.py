@@ -1226,52 +1226,60 @@ def source_postgres_copy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     The reference's native habitat executed for real (reference
     ``hooks/dataset.py:84-85,120-201``): a throwaway PostgreSQL server
     (unix socket, the shape of the reference's dockerized test PG,
-    reference ``README.md:183-207``) receives the supplier table over
-    per-partition ``psql \\copy`` streams, then a 4-way range-partitioned
-    COPY scan reads it back and aggregates. The oracle computes the same
-    aggregate from the original parquet, so any transport bug — CSV
-    quoting, NULL markers, numeric text round trip, split-predicate
-    coverage — breaks value parity. Money flows as numeric(12,2) through
-    PG and exact integer cents out, so the check is order-independent.
+    reference ``README.md:183-207``) receives the supplier table through
+    the ``dpp_pg_copy`` writer (per-partition COPY into staging tables,
+    one atomic commit), then a 4-way range-partitioned COPY scan reads it
+    back and aggregates. The read DECLARES everything — schema and split
+    bounds — so this query covers the declared-option paths, while
+    ``source_python_datasource_declarative`` covers the reflected ones.
+    The oracle computes the same aggregate from the original parquet, so
+    any transport bug — CSV quoting, NULL markers, numeric text round
+    trip, split-predicate coverage — breaks value parity. Money flows as
+    numeric(12,2) through PG and exact integer cents out, so the check
+    is order-independent.
 
     Scale shape: write parallelism = partition count (each partition one
     COPY backend), read parallelism = split count; nothing driver-side
-    but the seed predicates. On a cluster only the psql client binary is
-    needed on executors.
+    but the commit and the split predicates. On a cluster only the psql
+    client binary is needed on executors.
     """
-    from pyspark.sql import types as T
-
     from data_preparation_plugin_spark.sources import postgres_copy as pgc
+    from data_preparation_plugin_spark.sources.python_datasource import (
+        PgCopyDataSource,
+    )
 
     conninfo = pgc.ensure_postgres()
+    spark.dataSource.register(PgCopyDataSource)
     table = "dpp_supplier_roundtrip"
-    schema = T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DecimalType(12, 2)),
-        ]
-    )
     supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
+        F.col("s_suppkey").cast("bigint").alias("s_suppkey"),
         "s_name",
-        "s_nationkey",
+        F.col("s_nationkey").cast("int").alias("s_nationkey"),
         F.col("s_acctbal").cast("decimal(12,2)").alias("s_acctbal"),
     )
-    pgc.run_psql(conninfo, f'DROP TABLE IF EXISTS "{table}"')
-    pgc.run_psql(conninfo, pgc.pg_ddl(schema, table))
-    pgc.copy_dataframe_to_postgres(supplier.repartition(4), table, conninfo)
+    (
+        supplier.repartition(4)
+        .write.format("dpp_pg_copy")
+        .option("conninfo", conninfo)
+        .option("table", table)
+        .mode("overwrite")
+        .save()
+    )
     hi = supplier.agg(F.max("s_suppkey")).collect()[0][0] or 1
-    back = pgc.read_postgres_copy(
-        spark,
-        table,
-        schema,
-        conninfo,
-        partition_column="s_suppkey",
-        lower_bound=1,
-        upper_bound=int(hi),
-        num_partitions=4,
+    back = (
+        spark.read.format("dpp_pg_copy")
+        .option("conninfo", conninfo)
+        .option("table", table)
+        .option(
+            "schema",
+            "s_suppkey bigint, s_name string, s_nationkey int, "
+            "s_acctbal decimal(12,2)",
+        )
+        .option("partition_column", "s_suppkey")
+        .option("lower_bound", "1")
+        .option("upper_bound", str(hi))
+        .option("num_partitions", "4")
+        .load()
     )
     return back.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),

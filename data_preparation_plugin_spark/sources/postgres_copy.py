@@ -1,28 +1,16 @@
-"""COPY-based PostgreSQL transport — live-PG IO without JDBC/psycopg2.
+"""PostgreSQL helpers shared by the COPY transport and its tests.
 
 The reference's entire IO surface is PostgreSQL, and its actual transport
 is COPY: Embulk bulk-loads via COPY, ``shp2pgsql | psql`` pipes COPY text
 (reference ``operators/shp2pgsql.py:13-27``), and the psycopg2 engine is
-opened in batch mode (reference ``hooks/dataset.py:84-85``). This module
-implements that same transport Spark-side with zero extra dependencies:
-each executor partition pipes CSV through a local ``psql \\copy``
-subprocess, so bulk write parallelism is the DataFrame partition count
-and reads split into per-partition ``COPY (SELECT ... WHERE <range>) TO
-STDOUT`` scans — the COPY twin of Spark's partitioned JDBC read
-(:func:`data_preparation_plugin_spark.sources.read_jdbc`).
-
-Scale notes: on a real cluster the only requirement is the ``psql``
-client binary on executor images; each concurrent COPY holds one
-Postgres backend, so ``num_partitions`` is also the database-side
-admission knob. CSV NULLs travel as unquoted ``\\N`` (the pg_dump
-convention) in both directions. On the READ side the round trip is
-exact: PG quotes a data value equal to the NULL marker on output, and
-the pyarrow CSV parse keeps quoting information, so a genuine string
-``\\N`` survives. On the WRITE side pandas ``to_csv`` emits ``na_rep``
-unquoted and QUOTE_MINIMAL leaves a genuine ``\\N`` string unquoted
-too, so a literal ``\\N`` written through the transport lands as NULL —
-the standard lossy corner every CSV COPY pipeline accepts (write-side
-only; documented here deliberately).
+opened in batch mode (reference ``hooks/dataset.py:84-85``). The engine's
+one COPY transport is the ``dpp_pg_copy`` DataSource
+(:mod:`data_preparation_plugin_spark.sources.python_datasource`): staged,
+atomically committed writes and range-partitioned quoting-aware reads.
+This module holds what that transport and the live-PG tests share with
+zero extra dependencies: the Spark -> PostgreSQL type map and DDL, a
+``psql`` statement runner, ``information_schema`` type lookup, and a
+throwaway local server for tests and registered queries.
 """
 
 from __future__ import annotations
@@ -32,12 +20,7 @@ import shutil
 import subprocess
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-#: NULL marker used in both COPY directions (the pg_dump convention).
-CSV_NULL = r"\N"
 
 #: Spark atomic type -> PostgreSQL column type: the write-side inverse of
 #: :data:`data_preparation_plugin_spark.sources.PG_TYPE_MAP` (which is the
@@ -76,16 +59,13 @@ def pg_ddl(schema: T.StructType, table: str) -> str:
     return f'CREATE TABLE "{table}" ({cols})'
 
 
-def run_psql(
-    conninfo: str, sql: str, stdin_text: str | None = None
-) -> str:
+def run_psql(conninfo: str, sql: str) -> str:
     """Run one SQL statement through psql, returning unaligned stdout."""
     proc = subprocess.run(
         [
             "psql", conninfo, "-X", "-q", "-At",
             "-v", "ON_ERROR_STOP=1", "-c", sql,
         ],
-        input=stdin_text,
         capture_output=True,
         text=True,
     )
@@ -105,213 +85,6 @@ def pg_table_types(conninfo: str, table: str) -> dict[str, str]:
     return dict(
         line.split("|", 1) for line in out.splitlines() if line.strip()
     )
-
-
-def copy_dataframe_to_postgres(
-    df: DataFrame, table: str, conninfo: str
-) -> int:
-    """Parallel bulk load: one ``psql \\copy FROM STDIN`` per partition.
-
-    The COPY equivalent of the reference's chunked ``to_sql`` (reference
-    ``hooks/dataset.py:49-59,189-201``) — but each Spark partition opens
-    its own COPY stream, so the write runs partition-count-way parallel
-    instead of single-connection. Arrow batches are formatted to CSV
-    in-memory (never a per-row Python loop) and streamed straight into
-    the subprocess pipe. Returns the number of rows written.
-    """
-    columns = ", ".join(f'"{c}"' for c in df.columns)
-    copy_sql = (
-        f"\\copy \"{table}\" ({columns}) FROM STDIN "
-        f"(FORMAT csv, NULL '{CSV_NULL}')"
-    )
-    # Integer columns must be re-widened to pandas NULLABLE ints before
-    # CSV formatting: Arrow->pandas turns an int column containing any
-    # NULL into float64, and ``to_csv`` would then emit ``7.0`` — which
-    # PostgreSQL COPY rejects for smallint/integer/bigint (ADVICE r8).
-    int_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(
-            f.dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        )
-    ]
-
-    def write_partition(batches):
-        import pandas as pd
-
-        proc = subprocess.Popen(
-            [
-                "psql", conninfo, "-X", "-q",
-                "-v", "ON_ERROR_STOP=1", "-c", copy_sql,
-            ],
-            stdin=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-        )
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-            for c in int_cols:
-                pdf[c] = pdf[c].astype("Int64")
-            payload = pdf.to_csv(index=False, header=False, na_rep=CSV_NULL)
-            proc.stdin.write(payload.encode("utf-8"))
-        proc.stdin.close()
-        if proc.wait() != 0:
-            raise RuntimeError(
-                f"COPY failed: {proc.stderr.read().decode().strip()}"
-            )
-        yield pd.DataFrame({"rows_written": [n]})
-
-    total = (
-        df.mapInPandas(write_partition, schema="rows_written long")
-        .agg(F.sum("rows_written").alias("n"))
-        .collect()[0]["n"]
-    )
-    return int(total or 0)
-
-
-def _split_predicates(
-    partition_column: str,
-    lower_bound: int,
-    upper_bound: int,
-    num_partitions: int,
-) -> list[str]:
-    """Range predicates covering ALL rows (Spark JDBC split semantics:
-    the first split absorbs everything below the lower bound plus NULLs,
-    the last everything at or above the upper bound)."""
-    if num_partitions <= 1:
-        return ["TRUE"]
-    stride = max((upper_bound - lower_bound) // num_partitions, 1)
-    col = '"' + partition_column.replace('"', '""') + '"'
-    bounds = [lower_bound + i * stride for i in range(1, num_partitions)]
-    preds = [f"{col} < {bounds[0]} OR {col} IS NULL"]
-    preds += [
-        f"{col} >= {bounds[i]} AND {col} < {bounds[i + 1]}"
-        for i in range(len(bounds) - 1)
-    ]
-    preds.append(f"{col} >= {bounds[-1]}")
-    return preds
-
-
-def _coerce_to_schema(pdf, schema: T.StructType):
-    """Typed pandas frame from the all-string CSV parse of a COPY dump."""
-    import decimal
-
-    import pandas as pd
-
-    for field in schema.fields:
-        col = pdf[field.name]
-        dt = field.dataType
-        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            pdf[field.name] = pd.to_numeric(col).astype("Int64")
-        elif isinstance(dt, (T.FloatType, T.DoubleType)):
-            pdf[field.name] = pd.to_numeric(col).astype("float64")
-        elif isinstance(dt, T.BooleanType):
-            pdf[field.name] = col.map(
-                {"t": True, "f": False, "true": True, "false": False}
-            ).astype("boolean")
-        elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            # PG emits ISO timestamps with fractional seconds only when
-            # nonzero; ISO8601 mode parses the mixed shapes in one pass.
-            pdf[field.name] = pd.to_datetime(col, format="ISO8601")
-        elif isinstance(dt, T.DateType):
-            parsed = pd.to_datetime(col, format="ISO8601")
-            pdf[field.name] = [
-                None if pd.isna(v) else v.date() for v in parsed
-            ]
-        elif isinstance(dt, T.DecimalType):
-            pdf[field.name] = [
-                None if (v is None or (isinstance(v, float) and pd.isna(v)))
-                else decimal.Decimal(v)
-                for v in col
-            ]
-        else:  # StringType and friends: NULLs back to None
-            pdf[field.name] = col.where(col.notna(), None)
-    return pdf
-
-
-def read_postgres_copy(
-    spark: SparkSession,
-    table: str,
-    schema: T.StructType | str,
-    conninfo: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 4,
-) -> DataFrame:
-    """Partitioned PG scan over COPY: one range COPY per Spark task.
-
-    The COPY twin of :func:`~data_preparation_plugin_spark.sources.read_jdbc`
-    — a seed DataFrame carries one range predicate per split, and each
-    task shells ``COPY (SELECT ... WHERE <range>) TO STDOUT (FORMAT
-    csv)`` then Arrow-parses the result against the declared schema
-    (types per ``PG_TYPE_MAP``). Unlike the reference's materialize-all
-    single fetch (reference ``hooks/dataset.py:120-126``), the scan is
-    N-way parallel and never holds more than one split in memory.
-    """
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    columns = [field.name for field in schema.fields]
-    col_list = ", ".join(f'"{c}"' for c in columns)
-    if partition_column is None:
-        preds = ["TRUE"]
-    else:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned COPY reads need lower/upper bounds")
-        preds = _split_predicates(
-            partition_column, lower_bound, upper_bound, num_partitions
-        )
-    seeds = spark.createDataFrame(
-        [(p,) for p in preds], "pred string"
-    ).repartition(len(preds))
-
-    def read_partition(batches):
-        import io
-
-        import pyarrow as pa
-        from pyarrow import csv as pacsv
-
-        for pdf in batches:
-            for pred in pdf["pred"]:
-                copy_sql = (
-                    f"\\copy (SELECT {col_list} FROM \"{table}\" "
-                    f"WHERE {pred}) TO STDOUT (FORMAT csv, NULL '{CSV_NULL}')"
-                )
-                proc = subprocess.run(
-                    [
-                        "psql", conninfo, "-X", "-q",
-                        "-v", "ON_ERROR_STOP=1", "-c", copy_sql,
-                    ],
-                    capture_output=True,
-                )
-                if proc.returncode != 0:
-                    raise RuntimeError(
-                        f"COPY read failed: {proc.stderr.decode().strip()}"
-                    )
-                if not proc.stdout:
-                    continue
-                # pyarrow's CSV reader (not pandas') because it can keep
-                # quoting information: PG COPY quotes a data value equal
-                # to the NULL marker on output, and with
-                # ``quoted_strings_can_be_null=False`` a quoted "\\N"
-                # survives as the literal string while the unquoted
-                # marker becomes NULL — pd.read_csv applies na_values
-                # after unquoting and would collapse both (ADVICE r8).
-                out = pacsv.read_csv(
-                    io.BytesIO(proc.stdout),
-                    read_options=pacsv.ReadOptions(
-                        column_names=columns, autogenerate_column_names=False
-                    ),
-                    convert_options=pacsv.ConvertOptions(
-                        column_types={c: pa.string() for c in columns},
-                        null_values=[CSV_NULL],
-                        strings_can_be_null=True,
-                        quoted_strings_can_be_null=False,
-                    ),
-                ).to_pandas()
-                yield _coerce_to_schema(out, schema)
-
-    return seeds.mapInPandas(read_partition, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -374,12 +147,9 @@ def ensure_postgres(stage_dir: str = _PG_STAGE) -> str:
 
 
 __all__ = [
-    "CSV_NULL",
-    "copy_dataframe_to_postgres",
     "ensure_postgres",
     "pg_ddl",
     "pg_table_types",
     "pg_type_for",
-    "read_postgres_copy",
     "run_psql",
 ]

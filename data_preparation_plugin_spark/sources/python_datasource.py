@@ -1,4 +1,4 @@
-"""Declarative PostgreSQL Python DataSource — generic plugin passthrough.
+"""Declarative PostgreSQL Python DataSource — the engine's COPY transport.
 
 The reference's ``EmbulkOperator`` is a generic escape hatch: ANY Embulk
 input plugin can be driven from a declarative YAML config (reference
@@ -29,9 +29,8 @@ Three Embulk-parity behaviors, all declarative:
   ``InputPartition`` — Spark schedules them like file-scan splits.
 * **Transport**: each partition shells one ``COPY (SELECT ... WHERE
   <range>) TO STDOUT (FORMAT csv)`` through the local ``psql`` and
-  Arrow-parses the bytes (quoting-aware NULLs, see
-  :mod:`.postgres_copy`) — the same COPY path Embulk's own
-  postgresql input plugin uses.
+  Arrow-parses the bytes (quoting-aware NULLs, see :data:`CSV_NULL`)
+  — the same COPY path Embulk's own postgresql input plugin uses.
 * **Write side** (``df.write.format("dpp_pg_copy").mode(...)``): the
   output-plugin half of the parity. Each task COPYes its Arrow batches
   into a private staging table; the driver commit folds all stagings
@@ -51,10 +50,13 @@ admission knob. On a real cluster the only executor requirement is the
 ``psql`` client binary — the package itself travels with the usual
 Python environment.
 
-Registered as the query ``source_python_datasource_declarative``
-(``plans/ingest.py``) since round 13, per the VERDICT r11 #7 ordering
-(land after CORRECTNESS shows 381/381, which r12 did); the unit-level
-runtime evidence lives in tests/test_python_datasource.py.
+This is the engine's only COPY transport: every live-PG read and
+write (``source_postgres_copy_roundtrip`` with declared schema and
+bounds, ``source_python_datasource_declarative`` with reflected ones,
+the streaming sinks in ``plans/events.py``) goes through it;
+:mod:`.postgres_copy` keeps only DDL, ``psql`` and server helpers. The
+unit-level runtime evidence lives in tests/test_python_datasource.py
+and tests/test_postgres_live.py.
 """
 
 from __future__ import annotations
@@ -73,12 +75,16 @@ from pyspark.sql.datasource import (
 )
 
 from data_preparation_plugin_spark.sources.postgres_copy import (
-    CSV_NULL,
-    _coerce_to_schema,
-    _split_predicates,
     pg_ddl,
     run_psql,
 )
+
+#: NULL marker of the READ-side COPY dump (the pg_dump convention). PG
+#: quotes a data value equal to it on output, so the quoting-aware parse
+#: in :meth:`_PgCopyReader.read` keeps a genuine ``\N`` string. The write
+#: side uses ``NULL ''`` with quote-all-valid CSV instead (see
+#: :func:`_stage_arrow_batches`).
+CSV_NULL = r"\N"
 
 #: information_schema.columns ``data_type`` -> Spark DDL type. The long
 #: names PostgreSQL reports there, not the short aliases of
@@ -110,6 +116,75 @@ def _q_ident(name: str) -> str:
 def _q_lit(value: str) -> str:
     """Single-quote a PG string literal, escaping embedded quotes."""
     return "'" + value.replace("'", "''") + "'"
+
+
+def _split_predicates(
+    partition_column: str,
+    lower_bound: int,
+    upper_bound: int,
+    num_partitions: int,
+) -> list[str]:
+    """Range predicates covering ALL rows (Spark JDBC split semantics:
+    the first split absorbs everything below the lower bound plus NULLs,
+    the last everything at or above the upper bound)."""
+    if num_partitions <= 1:
+        return ["TRUE"]
+    stride = max((upper_bound - lower_bound) // num_partitions, 1)
+    col = _q_ident(partition_column)
+    bounds = [lower_bound + i * stride for i in range(1, num_partitions)]
+    preds = [f"{col} < {bounds[0]} OR {col} IS NULL"]
+    preds += [
+        f"{col} >= {bounds[i]} AND {col} < {bounds[i + 1]}"
+        for i in range(len(bounds) - 1)
+    ]
+    preds.append(f"{col} >= {bounds[-1]}")
+    return preds
+
+
+def _coerce_to_schema(pdf, schema: T.StructType):
+    """Typed pandas frame from the all-string CSV parse of a COPY dump."""
+    import decimal
+
+    import pandas as pd
+
+    for field in schema.fields:
+        col = pdf[field.name]
+        dt = field.dataType
+        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+            pdf[field.name] = pd.to_numeric(col).astype("Int64")
+        elif isinstance(dt, (T.FloatType, T.DoubleType)):
+            pdf[field.name] = pd.to_numeric(col).astype("float64")
+        elif isinstance(dt, T.BooleanType):
+            pdf[field.name] = col.map(
+                {"t": True, "f": False, "true": True, "false": False}
+            ).astype("boolean")
+        elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+            # PG emits ISO timestamps with fractional seconds only when
+            # nonzero; ISO8601 mode parses the mixed shapes in one pass.
+            # Plain datetimes, not pd.Timestamp: the row converter calls
+            # astimezone() on LTZ values, which a naive pd.Timestamp
+            # refuses (a naive datetime reads as local time, like
+            # createDataFrame's).
+            parsed = pd.to_datetime(col, format="ISO8601")
+            pdf[field.name] = pd.Series(
+                [None if pd.isna(v) else v.to_pydatetime() for v in parsed],
+                index=pdf.index,
+                dtype=object,
+            )
+        elif isinstance(dt, T.DateType):
+            parsed = pd.to_datetime(col, format="ISO8601")
+            pdf[field.name] = [
+                None if pd.isna(v) else v.date() for v in parsed
+            ]
+        elif isinstance(dt, T.DecimalType):
+            pdf[field.name] = [
+                None if (v is None or (isinstance(v, float) and pd.isna(v)))
+                else decimal.Decimal(v)
+                for v in col
+            ]
+        else:  # StringType and friends: NULLs back to None
+            pdf[field.name] = col.where(col.notna(), None)
+    return pdf
 
 
 def _reflect_schema(conninfo: str, table: str, pg_schema: str | None = None) -> str:
@@ -224,9 +299,12 @@ class _PgCopyReader(DataSourceReader):
             )
         if not proc.stdout:
             return
-        # Quoting-aware parse — identical contract to
-        # postgres_copy.read_postgres_copy (a quoted "\N" data value
-        # survives; the unquoted marker becomes NULL).
+        # pyarrow's CSV reader (not pandas') because it keeps quoting
+        # information: PG quotes a data value equal to the NULL marker,
+        # and with ``quoted_strings_can_be_null=False`` a quoted "\N"
+        # survives as the literal string while the unquoted marker
+        # becomes NULL — pd.read_csv applies na_values after unquoting
+        # and would collapse both.
         pdf = pacsv.read_csv(
             io.BytesIO(proc.stdout),
             read_options=pacsv.ReadOptions(
@@ -262,9 +340,8 @@ def _stage_arrow_batches(conninfo, table, schema, iterator) -> _StageCommit:
     ``quoting_style="all_valid"`` quotes EVERY valid value and writes
     nulls unquoted-empty; with COPY's ``NULL ''`` that makes the write
     side LOSSLESS — a genuine '\\N' or '' string arrives quoted (a
-    value), only real nulls arrive unquoted — closing the documented
-    write-side corner of ``copy_dataframe_to_postgres`` (whose pandas
-    to_csv cannot quote the NULL marker selectively). Types stay
+    value), only real nulls arrive unquoted (a pandas ``to_csv`` cannot
+    quote the NULL marker selectively and collapses both). Types stay
     Arrow-side: decimals exact, timestamps ISO, ints never floated by a
     null (no pandas hop at all). The staging table is created lazily so
     empty partitions leave nothing to clean up.
@@ -372,9 +449,9 @@ class _PgCopyWriter(DataSourceArrowWriter):
     driver's ``commit`` folds every staging table into the target inside
     ONE psql multi-statement command (a single implicit transaction), so
     the target never exposes a partial write — the semantics Embulk's
-    postgresql output plugin calls insert mode, vs. the direct
-    per-partition append of ``postgres_copy.copy_dataframe_to_postgres``.
-    A failed job's ``abort`` drops the stagings and the target is
+    postgresql output plugin calls insert mode (a direct per-partition
+    append would leave the finished partitions' rows behind a failed
+    job). A failed job's ``abort`` drops the stagings and the target is
     untouched.
 
     Timestamp note: LTZ (``timestamp``) columns are written as their

@@ -7,9 +7,13 @@ sort rows, normalize floats, and compare values.
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import subprocess
+import sys
 from datetime import datetime
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -30,6 +34,79 @@ def spark(tmp_path_factory):
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
     )
     yield session
+
+
+#: Builds and collects every oracle-checked query in a fresh interpreter
+#: the way an external caller would: a vanilla ``getOrCreate`` session (none
+#: of ``session.py``'s conf) with a deliberately NON-UTC JVM timezone, so
+#: any hidden dependence on the repo's own session shows up as an error,
+#: a value mismatch or a dtype mismatch.
+VANILLA_SESSION_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.extraJavaOptions", "-Duser.timezone=America/New_York")
+    .getOrCreate()
+)
+
+from data_preparation_plugin_spark import plans
+
+def enc(v):
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    return str(v)
+
+out = {{}}
+for name, query in plans.QUERIES.items():
+    if query.oracle is None:
+        continue
+    df = query.builder(spark, {sf_dir!r})
+    out[name] = {{
+        "columns": df.columns,
+        "dtypes": dict(df.dtypes),
+        "rows": [list(row) for row in df.collect()],
+    }}
+print("RESULT_JSON:" + json.dumps(out, default=enc))
+"""
+
+
+@pytest.fixture(scope="session")
+def vanilla_session_results(oracle):
+    """name -> {columns, dtypes, rows, oracle} of every oracle-checked
+    query, each built ONCE under :data:`VANILLA_SESSION_SCRIPT`. Rows are
+    JSON round tripped (datetimes as isoformat strings, which
+    ``_normalize`` renders the oracle's datetimes as too). ``oracle`` is
+    the canonical DuckDB result, taken right after the run: some oracles
+    read files their builder stages, which later tests restage from
+    other fixtures."""
+    from data_preparation_plugin_spark import plans
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    script = VANILLA_SESSION_SCRIPT.format(repo=repo, sf_dir=SF_DIR)
+    # 900s: the subprocess runs EVERY oracle-checked query (414) at
+    # local[4]; the bound is incidental plumbing, not part of the contract.
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    if proc.returncode != 0:
+        pytest.fail(f"vanilla-session run failed:\n{proc.stderr[-3000:]}")
+    payload = next(
+        line
+        for line in proc.stdout.splitlines()
+        if line.startswith("RESULT_JSON:")
+    )
+    results = json.loads(payload[len("RESULT_JSON:"):])
+    for name, got in results.items():
+        got["oracle"] = duckdb_result(oracle, plans.QUERIES[name].oracle)
+    return results
 
 
 @pytest.fixture(scope="session")
@@ -104,11 +181,11 @@ DUCK_TO_SPARK_TYPES = {
 }
 
 
-def assert_types_parity(name, spark_df, con, sql):
-    """Fail if the oracle's DuckDB types can't hash-match Spark's dtypes."""
+def assert_types_parity(name, sp, con, sql):
+    """Fail if the oracle's DuckDB types can't hash-match the Spark dtypes
+    ``sp`` (column -> ``DataFrame.dtypes`` string)."""
     rel = con.sql(sql)
     duck = dict(zip(rel.columns, (str(t) for t in rel.types)))
-    sp = dict(spark_df.dtypes)
     assert set(duck) == set(sp), f"{name}: column sets differ {duck} vs {sp}"
     for col, dtype in duck.items():
         allowed = DUCK_TO_SPARK_TYPES.get(dtype)

@@ -2452,16 +2452,21 @@ def test_events_stage_keys_on_fixture_content(spark, tmp_path, stage):
 
 def test_merge_totals_removes_its_checkpoint(spark):
     """The availableNow MERGE replay deletes its streaming checkpoint dir
-    once the query terminates; only the table dir the returned frame
-    reads stays."""
+    and its table dir once the query terminates: the returned frame is
+    eagerly checkpointed, so it reads neither and still has its rows."""
     import glob
     import os
     import tempfile
 
-    pattern = os.path.join(tempfile.gettempdir(), "dpp-stream-merge-ckpt-*")
-    before = set(glob.glob(pattern))
-    QUERIES["events_stream_merge_totals"].builder(spark, SF_DIR)
-    assert set(glob.glob(pattern)) <= before
+    patterns = [
+        os.path.join(tempfile.gettempdir(), f"dpp-stream-merge-{kind}-*")
+        for kind in ("ckpt", "table")
+    ]
+    before = {p: set(glob.glob(p)) for p in patterns}
+    df = QUERIES["events_stream_merge_totals"].builder(spark, SF_DIR)
+    for p in patterns:
+        assert set(glob.glob(p)) <= before[p], p
+    assert df.count() > 0
 
 
 def test_gear_vec_edge_cases_match_python_reference(spark, tmp_path):

@@ -4,10 +4,11 @@ The reference's native habitat is a real Postgres (reference
 ``hooks/dataset.py:84-85,120-201``), tested there against a dockerized
 server (reference ``README.md:183-207``). These tests start an actual
 PostgreSQL server (unix socket, trust auth, throwaway data dir) and push
-real data through ``sources.postgres_copy`` in both directions —
-runtime evidence for the PG type contract that the Derby-backed JDBC
-tests can only assert structurally. Skips cleanly where no server can
-be started.
+real data through the engine's one COPY transport, the ``dpp_pg_copy``
+DataSource, in both directions with a DECLARED schema — runtime evidence
+for the PG type contract (``sources.postgres_copy.pg_ddl``) that the
+Derby-backed JDBC tests can only assert structurally. Skips cleanly
+where no server can be started.
 """
 
 from __future__ import annotations
@@ -21,6 +22,10 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from data_preparation_plugin_spark.sources import postgres_copy as pgc
+from data_preparation_plugin_spark.sources.python_datasource import (
+    PgCopyDataSource,
+    _split_predicates,
+)
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +34,33 @@ def conninfo():
         return pgc.ensure_postgres()
     except (RuntimeError, OSError) as exc:
         pytest.skip(f"no local PostgreSQL available: {exc}")
+
+
+def copy_to_pg(df, table, conninfo) -> int:
+    """Overwrite ``table`` with ``df`` through ``dpp_pg_copy``; return the
+    row count PostgreSQL holds afterwards."""
+    df.sparkSession.dataSource.register(PgCopyDataSource)
+    (
+        df.write.format("dpp_pg_copy")
+        .option("conninfo", conninfo)
+        .option("table", table)
+        .mode("overwrite")
+        .save()
+    )
+    return int(pgc.run_psql(conninfo, f'SELECT count(*) FROM "{table}"'))
+
+
+def read_pg(spark, table, schema, conninfo, **options):
+    """``dpp_pg_copy`` read of ``table`` against a declared schema."""
+    spark.dataSource.register(PgCopyDataSource)
+    return (
+        spark.read.format("dpp_pg_copy")
+        .schema(schema)
+        .option("conninfo", conninfo)
+        .option("table", table)
+        .options(**{k: str(v) for k, v in options.items()})
+        .load()
+    )
 
 
 FULL_SCHEMA = T.StructType(
@@ -103,12 +135,9 @@ def test_ddl_matches_information_schema(conninfo):
 def test_copy_roundtrip_tricky_values(spark, conninfo):
     """Write tricky rows through COPY, read them back, get identical rows —
     quotes, newlines, unicode, NULLs in every type, negative decimals."""
-    pgc.run_psql(conninfo, 'DROP TABLE IF EXISTS "dpp_roundtrip"')
-    pgc.run_psql(conninfo, pgc.pg_ddl(FULL_SCHEMA, "dpp_roundtrip"))
     df = spark.createDataFrame(TRICKY_ROWS, FULL_SCHEMA)
-    written = pgc.copy_dataframe_to_postgres(df, "dpp_roundtrip", conninfo)
-    assert written == 3
-    back = pgc.read_postgres_copy(spark, "dpp_roundtrip", FULL_SCHEMA, conninfo)
+    assert copy_to_pg(df, "dpp_roundtrip", conninfo) == 3
+    back = read_pg(spark, "dpp_roundtrip", FULL_SCHEMA, conninfo)
     got = sorted(back.collect(), key=lambda r: r.id)
     want = sorted(df.collect(), key=lambda r: r.id)
     assert got == want
@@ -117,20 +146,16 @@ def test_copy_roundtrip_tricky_values(spark, conninfo):
 def test_copy_roundtrip_single_partition_nullable_ints(spark, conninfo):
     """A SINGLE partition mixing NULL and non-NULL integers round-trips.
 
-    Regression for ADVICE r8: Arrow->pandas widens an int column with any
-    NULL to float64 within a partition, so ``to_csv`` emitted ``7.0``
-    which PG COPY rejects for smallint/integer/bigint. The 3-row tricky
-    test passed only because each row landed in its own partition; this
-    coalesces to one partition so the mixed column truly widens.
+    Regression for ADVICE r8: a CSV write that goes through pandas widens
+    an int column with any NULL to float64 within a partition and emits
+    ``7.0``, which PG COPY rejects for smallint/integer/bigint. The 3-row
+    tricky test can pass with each row in its own partition; this
+    coalesces to one partition so a mixed column would truly widen.
     """
-    pgc.run_psql(conninfo, 'DROP TABLE IF EXISTS "dpp_nullable_int"')
-    pgc.run_psql(conninfo, pgc.pg_ddl(FULL_SCHEMA, "dpp_nullable_int"))
     df = spark.createDataFrame(TRICKY_ROWS, FULL_SCHEMA).coalesce(1)
     assert df.rdd.getNumPartitions() == 1
-    assert pgc.copy_dataframe_to_postgres(df, "dpp_nullable_int", conninfo) == 3
-    back = pgc.read_postgres_copy(
-        spark, "dpp_nullable_int", FULL_SCHEMA, conninfo
-    )
+    assert copy_to_pg(df, "dpp_nullable_int", conninfo) == 3
+    back = read_pg(spark, "dpp_nullable_int", FULL_SCHEMA, conninfo)
     got = sorted(back.collect(), key=lambda r: r.id)
     want = sorted(df.collect(), key=lambda r: r.id)
     assert got == want
@@ -158,7 +183,7 @@ def test_read_distinguishes_literal_backslash_n_from_null(spark, conninfo):
             T.StructField("payload", T.StringType()),
         ]
     )
-    back = pgc.read_postgres_copy(spark, "dpp_nullmark", schema, conninfo)
+    back = read_pg(spark, "dpp_nullmark", schema, conninfo)
     got = {r.id: r.payload for r in back.collect()}
     assert got == {1: "\\N", 2: None, 3: "plain"}
 
@@ -166,21 +191,17 @@ def test_read_distinguishes_literal_backslash_n_from_null(spark, conninfo):
 def test_partitioned_read_covers_all_rows(spark, conninfo):
     """Range-split COPY read returns every row exactly once, including ids
     outside the declared bounds (Spark JDBC split semantics)."""
-    pgc.run_psql(conninfo, 'DROP TABLE IF EXISTS "dpp_parts"')
-    pgc.run_psql(
-        conninfo, 'CREATE TABLE "dpp_parts" (id bigint, payload text)'
-    )
     df = spark.range(0, 1000).selectExpr(
         "id", "concat('payload-', id) AS payload"
     )
-    assert pgc.copy_dataframe_to_postgres(df, "dpp_parts", conninfo) == 1000
+    assert copy_to_pg(df, "dpp_parts", conninfo) == 1000
     schema = T.StructType(
         [
             T.StructField("id", T.LongType()),
             T.StructField("payload", T.StringType()),
         ]
     )
-    back = pgc.read_postgres_copy(
+    back = read_pg(
         spark,
         "dpp_parts",
         schema,
@@ -201,7 +222,7 @@ def test_partitioned_read_covers_all_rows(spark, conninfo):
 
 def test_split_predicates_partition_the_line():
     """Split predicates are exhaustive and disjoint on integer inputs."""
-    preds = pgc._split_predicates("k", 0, 100, 4)
+    preds = _split_predicates("k", 0, 100, 4)
     assert len(preds) == 4
     assert "IS NULL" in preds[0]
     assert preds[-1] == '"k" >= 75'

@@ -22,12 +22,19 @@ ROWS_ONLY_QUERIES = sorted(n for n, q in plans.QUERIES.items() if not q.oracle)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_types_safe(spark, oracle, name):
+def test_oracle_types_safe(oracle, vanilla_session_results, name):
     """A type-aware value hash (the driver's) must not see HUGEINT/DECIMAL
-    on the DuckDB side where Spark emits bigint/double (r1 q12 lesson)."""
-    query = plans.QUERIES[name]
-    df = query.builder(spark, SF_DIR)
-    assert_types_parity(name, df, oracle, query.oracle)
+    on the DuckDB side where Spark emits bigint/double (r1 q12 lesson).
+
+    The dtypes come from the one vanilla non-UTC session run that
+    ``test_session_independence`` also checks values from — an external
+    caller's environment — so this check builds no query of its own."""
+    assert_types_parity(
+        name,
+        vanilla_session_results[name]["dtypes"],
+        oracle,
+        plans.QUERIES[name].oracle,
+    )
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)

@@ -3,97 +3,30 @@
 The driver builds its own ``SparkSession.builder.getOrCreate()`` — none of
 the repo's ``session.py`` conf (UTC timezone, nanosAsLong, NTZ inference)
 is preset. Round 1 failed ``window_lag_lead``/``join_asof`` exactly this
-way (CORRECTNESS_r01.json). This test reproduces the driver's environment
-in a subprocess: vanilla session, non-UTC JVM timezone, and checks the
-timestamp-heavy queries value-for-value against their DuckDB oracles.
+way (CORRECTNESS_r01.json). The ``vanilla_session_results`` fixture
+reproduces such a caller's environment in a subprocess (vanilla session,
+non-UTC JVM timezone); this test checks every oracle-checked query there
+value-for-value against its DuckDB oracle. The same run's dtypes feed
+``test_queries_parity.test_oracle_types_safe``.
 """
 
 from __future__ import annotations
 
-import json
-import subprocess
-import sys
-from pathlib import Path
-
-from tests.conftest import SF_DIR, duckdb_result
-
-REPO = Path(__file__).resolve().parent.parent
-
-def _checked() -> list[str]:
-    """Every oracle-checkable query — the driver may widen or rotate its
-    checked slots in any round, so all of them must be session-proof."""
-    from data_preparation_plugin_spark import plans
-
-    return [n for n, q in plans.QUERIES.items() if q.oracle is not None]
-
-
-CHECKED = _checked()
-
-DRIVER_SCRIPT = r"""
-import json, sys
-sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-
-# Vanilla session, deliberately NON-UTC: any hidden dependence on the
-# repo's session.py conf shows up as an error or a value mismatch.
-spark = (
-    SparkSession.builder.master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.extraJavaOptions", "-Duser.timezone=America/New_York")
-    .getOrCreate()
-)
-
 from data_preparation_plugin_spark import plans
-
-def enc(v):
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return str(v)
-
-out = {{}}
-for name in {checked!r}:
-    df = plans.QUERIES[name].builder(spark, {sf_dir!r})
-    out[name] = [list(row) for row in df.collect()]
-    out[name + "__cols"] = df.columns
-print("RESULT_JSON:" + json.dumps(out, default=enc))
-"""
+from tests.conftest import canonical_rows
 
 
-def test_builders_under_vanilla_non_utc_session(oracle):
-    script = DRIVER_SCRIPT.format(repo=str(REPO), checked=CHECKED, sf_dir=SF_DIR)
-    # 900s: the subprocess runs EVERY oracle-checked query (414 as of
-    # r16) at local[4]; 480s fit the r15 registry on a fast host
-    # window but times out on slower windows (r16 inherited-state fix
-    # — the bound is incidental plumbing, not part of the contract).
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
-    assert proc.returncode == 0, f"vanilla-session run failed:\n{proc.stderr[-3000:]}"
-    payload = next(
-        line for line in proc.stdout.splitlines() if line.startswith("RESULT_JSON:")
-    )
-    got = json.loads(payload[len("RESULT_JSON:"):])
-
-    from tests.conftest import canonical_rows
-
-    for name in CHECKED:
-        q = plans_query(name)
-        d_cols, d_rows = duckdb_result(oracle, q.oracle)
-        s_cols, s_rows = canonical_rows(got[name + "__cols"], got[name])
-        # JSON round-trips datetimes as isoformat strings; _normalize
-        # renders oracle datetimes the same way, so plain compare works.
+def test_builders_under_vanilla_non_utc_session(vanilla_session_results):
+    # Every oracle-checkable query: a caller may run any of them, so all
+    # of them must be session-proof.
+    checked = [n for n, q in plans.QUERIES.items() if q.oracle is not None]
+    assert sorted(vanilla_session_results) == sorted(checked)
+    for name in checked:
+        got = vanilla_session_results[name]
+        d_cols, d_rows = got["oracle"]
+        s_cols, s_rows = canonical_rows(got["columns"], got["rows"])
         assert s_cols == d_cols, f"{name}: columns {s_cols} vs {d_cols}"
         assert s_rows == d_rows, (
             f"{name}: vanilla-session values diverge from oracle; "
             f"first spark={s_rows[:2]} oracle={d_rows[:2]}"
         )
-
-
-def plans_query(name):
-    from data_preparation_plugin_spark import plans
-
-    return plans.QUERIES[name]

@@ -18,9 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_preparation_plugin_spark.plans.registry import (
-    adopt_cache,
-    drop_stale_cache,
     load_table,
+    query_cache,
     register,
 )
 
@@ -535,7 +534,6 @@ def resolve_hierarchy(
     guards against)."""
     # (node, anc, depth): anc = farthest known ancestor, depth = #edges to
     # it. Roots start resolved (anc = self).
-    drop_stale_cache("resolve_hierarchy")
     labels = nodes.select(
         "node",
         F.when(F.col("node") >= bound, (F.col("node") / 2).cast("long"))
@@ -572,7 +570,7 @@ def resolve_hierarchy(
         jump = F.least(jump_cap, steps_to_root)
         arith_anc = F.expr("shiftright(anc, CAST(__jump AS INT))")
         new_anc = F.coalesce("__anc", arith_anc)
-        doubled = (
+        doubled = query_cache(
             labels.join(hop, labels.anc == hop.__n, "left")
             .withColumn("__jump", jump)
             .select(
@@ -588,7 +586,6 @@ def resolve_hierarchy(
                 # a value the join already held.
                 (new_anc != labels.anc).alias("__moved"),
             )
-            .persist()
         )
         # ONE job per round: the full-scan aggregate both populates the
         # round's cache (every partition computed — limit(1) would
@@ -605,16 +602,11 @@ def resolve_hierarchy(
         if not moved:
             break
         if max_rounds is not None and round_idx >= max_rounds:
-            adopt_cache("resolve_hierarchy", prev_round)
             raise RuntimeError(
                 f"resolve_hierarchy did not converge in {max_rounds} "
                 "rounds — pointer doubling has regressed toward "
                 "per-level walking"
             )
-    # The returned plan reads the final round's cache; the NEXT call
-    # releases it (drop_stale_cache above).
-    if prev_round is not None:
-        adopt_cache("resolve_hierarchy", prev_round)
     return labels.select("node", F.col("anc").alias("root"), "depth")
 
 

@@ -27,13 +27,12 @@ from data_preparation_plugin_spark.functions.text import tokens as tokens_col
 from data_preparation_plugin_spark.plans.registry import (
     NONZERO_VEC_SQL,
     QUERIES,
-    adopt_cache,
-    drop_stale_cache,
     int_ratio_round_sql,
     load_table,
     nonzero_vec,
     parallelize_scan,
     pin_width,
+    query_cache,
     register,
 )
 from data_preparation_plugin_spark.plans.text import (
@@ -884,13 +883,10 @@ def connected_components_star(
     # at sf0.1; at corpus scale that is two full scans for one).
     # persist(), not localCheckpoint: the checkpoint's .rdd compilation
     # bypasses AQE and its materialization added ~1.7s of fixed wall
-    # (in-window A/B 5.37s vs 7.05s); the cache keeps plan semantics
-    # and the rotation keeps repeated builder calls honest.
-    drop_stale_cache("connected_components_star")
-    orig = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).persist()
-    adopt_cache("connected_components_star", orig)
+    # (in-window A/B 5.37s vs 7.05s); the cache keeps plan semantics.
+    orig = query_cache(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    )
     nodes = (
         orig.select(F.col("u").alias("node"))
         .unionByName(orig.select(F.col("v").alias("node")))
@@ -1922,11 +1918,6 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle) row — is gone; one lineage builds the ordered sets, one
     cache serves all four consumers.
     """
-    # Rotate out the PREVIOUS call's persisted doc_sets first: cache
-    # entries key on the canonicalized plan, so without this a repeated
-    # builder call (bench reps) would serve from the prior rep's cache
-    # instead of recomputing — see registry.drop_stale_cache.
-    drop_stale_cache("dedup_containment_pruned")
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
     # persist (not localCheckpoint): an eager localCheckpoint becomes a
     # stats-less ExistingRDD, which the planner sizes at "unknown =
@@ -1936,9 +1927,9 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # InMemoryRelation size instead, so the planner broadcasts the
     # genuinely-small sides here and would still pick shuffle joins on
     # a corpus-scale cache. The explode runs exactly once.
-    shingled = exploded_shingles(
-        docs, ["doc_id"], "text", SHINGLE_SIZE, distinct=True
-    ).persist()
+    shingled = query_cache(
+        exploded_shingles(docs, ["doc_id"], "text", SHINGLE_SIZE, distinct=True)
+    )
     df_counts = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # sid: deterministic 64-bit surrogate per kept shingle — a pure
     # function of the shingle TEXT, so every consumer subtree computes
@@ -1950,10 +1941,10 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # injective on the kept vocabulary, which the audit below checks
     # every run instead of assuming (64-bit birthday risk becomes real
     # around ~2^32 distinct kept shingles).
-    vocab = (
-        df_counts.filter(F.col("df") <= MAX_SHINGLE_DF)
-        .withColumn("sid", F.xxhash64("shingle"))
-        .persist()
+    vocab = query_cache(
+        df_counts.filter(F.col("df") <= MAX_SHINGLE_DF).withColumn(
+            "sid", F.xxhash64("shingle")
+        )
     )
     kept = shingled.join(vocab, "shingle").select("doc_id", "df", "sid")
     # One canonical global order: (df asc, sid asc). ANY global total
@@ -1963,7 +1954,7 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skips per-element UTF8 comparisons entirely.
     # doc_sets feeds FOUR consumers (prefix probe, posting index, both
     # verify sides); one persisted materialization serves all four.
-    doc_sets = kept.groupBy("doc_id").agg(
+    doc_sets = query_cache(kept.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("df", "sid"))).alias(
             "ordered"
         )
@@ -1971,7 +1962,7 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.transform("ordered", lambda x: x["sid"]).alias("sids"),
         F.size("ordered").alias("n"),
-    ).persist()
+    ))
     # Materialize the whole front half once, eagerly — and audit the
     # xxhash64 surrogate's injectivity in the SAME action (the vocab
     # aggregate rides the materialization job instead of paying its own
@@ -1995,13 +1986,10 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dedup_containment_pruned: xxhash64 sid collision on the "
             f"kept vocabulary ({n_rows} shingles, {n_sids} distinct sids)"
         )
-    # The upstream caches only exist to build doc_sets; release them so
-    # repeated builder calls (bench reps) cannot accumulate storage.
+    # The upstream caches only exist to build doc_sets; release them
+    # now rather than at the next query.
     shingled.unpersist()
     vocab.unpersist()
-    # doc_sets itself must stay cached until the returned plan executes;
-    # the NEXT builder call releases it (drop_stale_cache above).
-    adopt_cache("dedup_containment_pruned", doc_sets)
     # prefix_len = n - ceil(t*n/100) + 1, in engine-exact integer form.
     prefix_len = (
         F.col("n")
@@ -2310,20 +2298,20 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across four near-identical 32-task stages at sf0.1). The pairs
     # builder reads the SAME cached sigs through its optional
     # parameter, so the whole calibration runs the signature front
-    # exactly once. Caches rotate on re-entry (registry discipline).
-    drop_stale_cache("dedup_lsh_calibration")
+    # exactly once.
     docs = load_table(spark, sf_dir, "documents")
-    sigs = _minhash_signatures(docs).persist()
-    shingled = exploded_shingles(
-        parallelize_scan(docs), ["doc_id"], "text", SHINGLE_SIZE,
-        distinct=True,
-    ).persist()
+    sigs = query_cache(_minhash_signatures(docs))
+    shingled = query_cache(
+        exploded_shingles(
+            parallelize_scan(docs), ["doc_id"], "text", SHINGLE_SIZE,
+            distinct=True,
+        )
+    )
     # One materialization job for BOTH caches (a column projection
     # through a persisted frame still computes and caches whole
     # partitions): sequential count()s would serialize two saturating
     # fronts that overlap fine.
     sigs.select("doc_id").unionAll(shingled.select("doc_id")).count()
-    adopt_cache("dedup_lsh_calibration", sigs, shingled)
     pairs = dedup_minhash_lsh_pairs(
         spark, sf_dir, sigs=sigs
     ).localCheckpoint(eager=True)

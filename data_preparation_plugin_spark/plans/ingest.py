@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_preparation_plugin_spark.operators.load import CsvLoadOperator, LoadSpec
-from data_preparation_plugin_spark.plans.registry import load_table, register
+from data_preparation_plugin_spark.plans.registry import load_table, query_cache, register
 
 _STAGE_ROOT = os.path.join(tempfile.gettempdir(), "dpp-source-stage")
 _CSV_DIR = os.path.join(_STAGE_ROOT, "nation_csv")
@@ -686,7 +686,7 @@ def source_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("value")
     )
     lines.write.mode("overwrite").text(_QUAR_DIR)
-    parsed = (
+    parsed = query_cache(
         spark.read.schema(
             "n_nationkey INT, n_name STRING, n_regionkey INT,"
             " _corrupt_record STRING"
@@ -698,7 +698,6 @@ def source_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # referenced columns are ONLY the corrupt-record column on an
         # uncached scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_
         # COLUMN) — caching materializes the parse once for both halves.
-        .cache()
     )
     good = (
         parsed.where(F.col("_corrupt_record").isNull())
@@ -2160,7 +2159,8 @@ def source_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("value")
     )
     lines.coalesce(1).write.mode("overwrite").text(_JSONQ_DIR)
-    df = (
+    # Cached for the corrupt-record-only rule (see source_csv_quarantine).
+    df = query_cache(
         spark.read.schema(
             "s_suppkey BIGINT, s_nationkey BIGINT, _corrupt_record STRING"
         )
@@ -2168,7 +2168,6 @@ def source_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(_JSONQ_DIR)
     )
-    df = df.cache()
     clean = (
         df.filter(F.col("_corrupt_record").isNull())
         .groupBy("s_nationkey")

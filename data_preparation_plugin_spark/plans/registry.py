@@ -5,10 +5,22 @@ optional DuckDB-runnable oracle SQL string. The driver compares the two at
 sf=0.01 with an order-insensitive value hash after sorting columns by name,
 so builders must alias every computed column to the same name the oracle
 uses (see repo instructions / SURVEY.md §5).
+
+Cache lifetime: builders and their helpers persist only through
+:func:`query_cache`, which records the frame in one module-level list.
+:func:`register` wraps each builder; the OUTERMOST call (a builder
+called from inside another does not count) first unpersists every frame
+the previous query recorded. A query's caches thus live from its builder
+call until the next query starts — callers build, sink, then build the
+next — and a repeated call recomputes instead of reading the prior
+call's cache (Spark's CacheManager matches on the canonicalized plan).
+The list and the depth counter are process-global: builders are not
+re-entrant across threads.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -57,6 +69,26 @@ class Query:
 
 QUERIES: dict[str, Query] = {}
 
+#: Frames persisted by the query being built or sunk (see module doc).
+_QUERY_CACHES: list[DataFrame] = []
+#: Registered-builder calls in progress; 0 between queries.
+_builder_depth = 0
+
+
+def query_cache(df: DataFrame) -> DataFrame:
+    """Persist ``df`` until the next query's outermost builder call."""
+    df = df.persist()
+    _QUERY_CACHES.append(df)
+    return df
+
+
+def _release_query_caches() -> None:
+    while _QUERY_CACHES:
+        try:
+            _QUERY_CACHES.pop().unpersist()
+        except Exception:
+            pass  # owning SparkSession already stopped — nothing to free
+
 
 def register(
     name: str,
@@ -67,14 +99,27 @@ def register(
     didactic: bool = False,
     scale_note: str = "",
 ) -> Callable[[Builder], Builder]:
-    """Decorator: register ``fn`` as the builder for query ``name``."""
+    """Decorator: register ``fn`` as the builder for query ``name``,
+    wrapped so its outermost call releases the previous query's caches."""
 
     def wrap(fn: Builder) -> Builder:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
+
+        @functools.wraps(fn)
+        def build(*args, **kwargs) -> DataFrame:
+            global _builder_depth
+            if _builder_depth == 0:
+                _release_query_caches()
+            _builder_depth += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                _builder_depth -= 1
+
         QUERIES[name] = Query(
             name=name,
-            builder=fn,
+            builder=build,
             oracle=oracle,
             category=category,
             doc=(fn.__doc__ or "").strip(),
@@ -83,7 +128,7 @@ def register(
             didactic=didactic,
             scale_note=scale_note,
         )
-        return fn
+        return build
 
     return wrap
 
@@ -287,34 +332,6 @@ def pin_width(df: DataFrame, *cols: str) -> DataFrame:
     except (TypeError, ValueError):
         pass  # non-integer value (e.g. vendor "auto"): keep core count
     return df.repartition(width, *cols)
-
-
-#: Live persist() handles per builder, rotated on re-entry. Spark's
-#: CacheManager keys cache entries on the CANONICALIZED plan, so a
-#: repeated builder call (bench best-of-N reps, back-to-back sessions
-#: in one process) would silently serve rep N's "computation" from rep
-#: 1's materialized cache — which both leaks storage across a
-#: 414-query marathon and turns a steady-state timing into a cache
-#: read (exactly the result-caching-across-runs gaming the round rules
-#: forbid). Builders that persist() an intermediate register it here
-#: and drop the PREVIOUS call's entries on entry, so every invocation
-#: recomputes from the parquet inputs while consumers within one
-#: invocation still share the single materialization.
-_LIVE_CACHES: dict[str, list[DataFrame]] = {}
-
-
-def drop_stale_cache(key: str) -> None:
-    """Unpersist the previous builder call's registered caches for ``key``."""
-    for df in _LIVE_CACHES.pop(key, []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning SparkSession already stopped — nothing to free
-
-
-def adopt_cache(key: str, *dfs: DataFrame) -> None:
-    """Register persisted frames to be dropped on the NEXT builder call."""
-    _LIVE_CACHES.setdefault(key, []).extend(dfs)
 
 
 def queries() -> dict[str, Builder]:

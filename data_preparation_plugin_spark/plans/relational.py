@@ -18,7 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_preparation_plugin_spark.plans.registry import load_table, register
+from data_preparation_plugin_spark.plans.registry import (
+    int_ratio_round_sql,
+    load_table,
+    register,
+)
 
 
 # --------------------------------------------------------------------------
@@ -466,14 +470,24 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Q10 revenue per line in exact integer units (cents x discount
+#: hundredths): the summed BIGINT rounds to cents identically in both
+#: engines, where a float sum's half-cent ties depended on summation order.
+_Q10_UNITS = (
+    "CAST(round(l_extendedprice * 100) AS BIGINT)"
+    " * CAST(round((1 - l_discount) * 100) AS BIGINT)"
+)
+
+
 @register(
     "q10_returned_items",
     category="join",
     bench=True,
-    oracle="""
+    oracle=f"""
     SELECT c_custkey,
            c_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           {int_ratio_round_sql(f"sum({_Q10_UNITS})", "10000", 2, "//")}
+               AS revenue,
            n_name
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -498,8 +512,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            F.expr(
+                int_ratio_round_sql(f"sum({_Q10_UNITS})", "10000", 2, "div")
             ).alias("revenue")
         )
         .select("c_custkey", "c_name", "revenue", "n_name")

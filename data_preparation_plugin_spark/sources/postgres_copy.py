@@ -15,6 +15,7 @@ throwaway local server for tests and registered queries.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import subprocess
@@ -25,6 +26,8 @@ from pyspark.sql import types as T
 #: Spark atomic type -> PostgreSQL column type: the write-side inverse of
 #: :data:`data_preparation_plugin_spark.sources.PG_TYPE_MAP` (which is the
 #: read-side contract). Decimal is handled separately (parameterized).
+#: LTZ is an instant, so it maps to ``timestamptz``: the writer's Arrow CSV
+#: carries the session-TZ offset, which a zoneless ``timestamp`` drops.
 _SPARK_TO_PG: dict[type, str] = {
     T.ByteType: "smallint",
     T.ShortType: "smallint",
@@ -35,7 +38,7 @@ _SPARK_TO_PG: dict[type, str] = {
     T.StringType: "text",
     T.BooleanType: "boolean",
     T.DateType: "date",
-    T.TimestampType: "timestamp",
+    T.TimestampType: "timestamptz",
     T.TimestampNTZType: "timestamp",
 }
 
@@ -102,6 +105,13 @@ def _run_as_owner(args: list[str]) -> subprocess.CompletedProcess:
     return subprocess.run(args, capture_output=True, text=True)
 
 
+def _stop_postgres(data: str, starter_pid: int) -> None:
+    """``atexit`` hook: fast-stop the server this process started (a
+    forked child inherits the hook but never started the server)."""
+    if os.getpid() == starter_pid:
+        _run_as_owner(["pg_ctl", "-D", data, "-m", "fast", "stop"])
+
+
 def ensure_postgres(stage_dir: str = _PG_STAGE) -> str:
     """Start (or reuse) a throwaway local PostgreSQL; return its conninfo.
 
@@ -110,7 +120,8 @@ def ensure_postgres(stage_dir: str = _PG_STAGE) -> str:
     dockerized test Postgres (reference ``README.md:183-207``). Reuses a
     live server across calls; raises RuntimeError with the underlying
     stderr when no server can be started (callers turn that into a test
-    skip).
+    skip). A server this process starts is stopped when it exits; a
+    server it merely reused is left running for its starter.
     """
     sock = os.path.join(stage_dir, "sock")
     data = os.path.join(stage_dir, "data")
@@ -142,6 +153,7 @@ def ensure_postgres(stage_dir: str = _PG_STAGE) -> str:
     )
     if start.returncode != 0:
         raise RuntimeError(f"pg_ctl start failed: {start.stderr.strip()}")
+    atexit.register(_stop_postgres, data, os.getpid())
     run_psql(conninfo, "SELECT 1")
     return conninfo
 

@@ -161,11 +161,12 @@ def _coerce_to_schema(pdf, schema: T.StructType):
         elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
             # PG emits ISO timestamps with fractional seconds only when
             # nonzero; ISO8601 mode parses the mixed shapes in one pass.
-            # Plain datetimes, not pd.Timestamp: the row converter calls
-            # astimezone() on LTZ values, which a naive pd.Timestamp
-            # refuses (a naive datetime reads as local time, like
-            # createDataFrame's).
-            parsed = pd.to_datetime(col, format="ISO8601")
+            # LTZ (a timestamptz column) parses zone-aware, so the instant
+            # survives any worker TZ; NTZ stays naive wall time. Plain
+            # datetimes, not pd.Timestamp: the row converter calls
+            # astimezone() on LTZ values.
+            ltz = isinstance(dt, T.TimestampType)
+            parsed = pd.to_datetime(col, format="ISO8601", utc=ltz)
             pdf[field.name] = pd.Series(
                 [None if pd.isna(v) else v.to_pydatetime() for v in parsed],
                 index=pdf.index,
@@ -454,11 +455,10 @@ class _PgCopyWriter(DataSourceArrowWriter):
     job). A failed job's ``abort`` drops the stagings and the target is
     untouched.
 
-    Timestamp note: LTZ (``timestamp``) columns are written as their
-    instant under the session timezone (this repo pins UTC in
-    ``session.py``) into PG's zoneless ``timestamp``; a non-UTC session
-    should cast to ``timestamp_ntz`` first, the standard zoneless-column
-    discipline everywhere else in this repo.
+    Timestamp note: LTZ (``timestamp``) columns are written with their
+    session-TZ offset into ``timestamptz`` and read back zone-aware, so
+    the instant round-trips under any session or worker timezone; NTZ
+    columns go to zoneless ``timestamp`` as wall time.
     """
 
     def __init__(self, options, schema: T.StructType, overwrite: bool):

@@ -15,6 +15,11 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
 
 import pytest
 
@@ -128,7 +133,7 @@ def test_ddl_matches_information_schema(conninfo):
         "label": "text",
         "active": "boolean",
         "day": "date",
-        "at": "timestamp without time zone",
+        "at": "timestamp with time zone",
     }
 
 
@@ -226,3 +231,61 @@ def test_split_predicates_partition_the_line():
     assert len(preds) == 4
     assert "IS NULL" in preds[0]
     assert preds[-1] == '"k" >= 75'
+
+
+def test_copy_roundtrip_timestamps_under_non_utc_session(spark, conninfo):
+    """LTZ values keep their instant and NTZ values their wall time when
+    the session timezone differs from the Python workers' (UTC here).
+
+    LTZ lands in ``timestamptz``, so the offset the writer's Arrow CSV
+    carries (``-0500`` under New York) is honored and the reader parses
+    zone-aware values. A zoneless column dropped that offset and read the
+    wall time back in the worker's TZ, shifting every instant by 5 hours.
+    """
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("at", T.TimestampType()),
+            T.StructField("wall", T.TimestampNTZType()),
+        ]
+    )
+    rows = [(r.id, r.at, r.at) for r in TRICKY_ROWS]
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.createDataFrame(rows, schema)
+        assert copy_to_pg(df, "dpp_tz_roundtrip", conninfo) == 3
+        back = read_pg(spark, "dpp_tz_roundtrip", schema, conninfo)
+        got = sorted(back.collect(), key=lambda r: r.id)
+        want = sorted(df.collect(), key=lambda r: r.id)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert got == want
+
+
+def test_server_stopped_at_exit_only_by_its_starter(conninfo):
+    """A process that starts the server stops it when it exits; a process
+    that merely reused a live server leaves it running."""
+    starter = (
+        "import sys; from data_preparation_plugin_spark.sources import"
+        " postgres_copy as p; p.run_psql(p.ensure_postgres(*sys.argv[1:]),"
+        " 'SELECT 1')"
+    )
+    stage = tempfile.mkdtemp(prefix="dpp-pg-atexit-")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo}
+    try:
+        for args in ([stage], []):  # a fresh server, then the shared one
+            subprocess.run(
+                [sys.executable, "-c", starter, *args], env=env, check=True
+            )
+        with pytest.raises(RuntimeError):
+            pgc.run_psql(
+                f"host={stage}/sock user=postgres dbname=postgres", "SELECT 1"
+            )
+        assert pgc.run_psql(conninfo, "SELECT 1").strip() == "1"
+    finally:  # a server the hook failed to stop must not outlive the test
+        pgc._run_as_owner(
+            ["pg_ctl", "-D", f"{stage}/data", "-m", "immediate", "stop"]
+        )
+        shutil.rmtree(stage, ignore_errors=True)

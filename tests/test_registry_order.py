@@ -258,3 +258,23 @@ def test_didactic_markers_are_scarce_and_documented():
         assert _re.search(
             r"bucketed|session_window|windowed agg|deployment", doc
         ), f"{n} is didactic but its docstring names no deployment alternative"
+
+
+
+def test_query_cache_is_the_only_persist():
+    """Cache lifetime has one mechanism: every persisted frame goes through
+    ``registry.query_cache``, which the next query's builder releases. A
+    bare ``.persist(``/``.cache()`` anywhere else in the package would
+    outlive its query again."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(plans.__file__).resolve().parent.parent
+    pattern = re.compile(r"\.persist\(|\.cache\(\)")
+    hits = [
+        (path.relative_to(pkg).as_posix(), line.strip())
+        for path in sorted(pkg.rglob("*.py"))
+        for line in path.read_text().splitlines()
+        if pattern.search(line)
+    ]
+    assert hits == [("plans/registry.py", "df = df.persist()")], hits
